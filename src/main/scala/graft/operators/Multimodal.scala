@@ -326,7 +326,12 @@ object Multimodal {
     * histogram + weighted SimHash ride whole-stage codegen, the scan
     * prunes to (media_id, payload), and no encoder round-trip runs in
     * the hot path (the mapPartitions form this replaced deserialized
-    * every row). Exposed for the plan pin. */
+    * every row). No filter sits between this projection and the
+    * entity-distinct aggregate of `mediaTable`, so the optimizer may
+    * evaluate the kernel inside that aggregate's result expressions,
+    * which the rendered plan omits — the plan pin therefore reads
+    * expression trees and generated code, not the plan string. Exposed
+    * for the plan pin. */
   private[graft] def perceptualBase(media: DataFrame): DataFrame = {
     val ps = org.apache.spark.sql.graft.Bridge.column(
       graft.expressions.PerceptualSig(

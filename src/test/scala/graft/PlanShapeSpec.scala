@@ -427,17 +427,39 @@ class PlanShapeSpec extends AnyFunSuite {
     // the registered query localCheckpoints its result (its executed
     // plan is just the checkpoint scan) — pin the SIGNATURE stage the
     // operator composes from
+    import org.apache.spark.sql.execution.{SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     val df = graft.operators.Multimodal.perceptualBase(
       graft.operators.Multimodal.mediaTable(spark, Sf))
     df.collect()
-    val p = df.queryExecution.executedPlan.toString
+    val exec = df.queryExecution.executedPlan
+    val p = exec.toString
     assert(!p.contains("DeserializeToObject") && !p.contains("MapPartitions"),
       s"perceptual signature must be a kernel projection, not an encoder " +
         s"round-trip:\n$p")
-    assert(p.toLowerCase.contains("perceptualsig"),
+    // CollapseProject may fold the kernel projection into the entity-
+    // distinct aggregate's result expressions, and a rendered
+    // HashAggregate shows only its output attributes — so read the
+    // expression trees and the generated code, never the plan string
+    def nodes(n: SparkPlan): Seq[SparkPlan] = n match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case qs: QueryStageExec => nodes(qs.plan)
+      case other => other +: other.children.flatMap(nodes)
+    }
+    def holdsKernel(n: SparkPlan): Boolean = n.expressions.exists(
+      _.exists(_.isInstanceOf[graft.expressions.PerceptualSig]))
+    val all = nodes(exec)
+    assert(all.exists(holdsKernel),
       s"expected the PerceptualSig kernel in the plan:\n$p")
-    assert(p.contains("*("),
-      s"the signature projection must sit inside a codegen span:\n$p")
+    // the static call PerceptualSig.doGenCode emits: a CodegenFallback
+    // kernel would sit inside a span too, but only as an interpreted call
+    val bodies = all.collect {
+      case w: WholeStageCodegenExec if w.exists(holdsKernel) =>
+        w.doCodeGen()._2.body
+    }
+    assert(bodies.exists(_.contains("graft.expressions.Kernels.perceptualSig(")),
+      s"the signature kernel must be generated code inside a codegen span " +
+        s"(${bodies.size} spans hold it):\n$p")
   }
 
   test("unpartitioned windows run on bounded relations, never a fact") {
