@@ -27,10 +27,11 @@ import graft.sources.Tables
   *    [[MaxDriverGraph]], the [[Cluster]] union-find / BPE driver-gate
   *    pattern: 10 merges of a 25-edge graph are not worth 30 Spark jobs;
   *  - above the cap (web-scale link graphs) the DISTRIBUTED loop takes
-  *    over: per iteration one edges⋈ranks equi-join (ranks co-partitioned
-  *    by node), one dst-keyed aggregation, one anti-join for the dangling
-  *    mass, lineage cut per round (eager localCheckpoint, previous cut
-  *    freed — the BPE trainer protocol) so plan depth stays O(1) in the
+  *    over: per iteration one Pregel-style superstep over a rank state
+  *    that carries each node's out-adjacency — one node-keyed exchange
+  *    and aggregation, the dangling mass observed on the same job —
+  *    lineage cut per round (eager localCheckpoint, previous cut freed —
+  *    the BPE trainer protocol) so plan depth stays O(1) in the
   *    iteration budget. No driver-side row processing above the gate.
   *
   * Determinism contract (the pinned-fold float rules): every float SUM
@@ -101,23 +102,8 @@ object Graphs {
     val nNodes = nodes.count()
     val out =
       if (nNodes + nEdges <= driverCap) pagerankDriver(spark, edges, nodes, iters)
-      else {
-        // r20 §2.2/§2.6: the loop re-reads edges 1× and ranks 3× per
-        // iteration; re-pin both relations at a size-adaptive EXPLICIT
-        // partition count (see Shuffles.sizedPartitions — caches and
-        // checkpoints never get AQE-coalesced, so they were conf-wide
-        // regardless of size). One tiny extra shuffle each, once.
-        val p = Shuffles.sizedPartitions(edges, nNodes + nEdges)
-        val conf = spark.sessionState.conf.numShufflePartitions
-        val edgesP = if (p < conf)
-          edges.repartition(p, col("from_type")).persist() else edges
-        val nodesP = if (p < conf)
-          nodes.repartition(p, col("node")).persist() else nodes
-        val r = pagerankDistributed(edgesP, nodesP, nNodes, iters, p)
-        if (edgesP ne edges) edgesP.unpersist()
-        if (nodesP ne nodes) nodesP.unpersist()
-        r
-      }
+      else pagerankDistributed(edges, nNodes, iters,
+        Shuffles.sizedPartitions(edges, nNodes + nEdges))
     edges.unpersist(); nodes.unpersist()
     out.select(col("node"), round(col("rank"), 6).as("rank"))
   }
@@ -169,67 +155,65 @@ object Graphs {
     nodeArr.map(n => (n, rank(n))).toSeq.toDF("node", "rank")
   }
 
-  /** Distributed rank loop — the 100 TB path: per iteration an
-    * edges⋈ranks equi-join, a dst-keyed pinned-fold aggregation, a
-    * broadcast 1-row dangling mass, and an eager lineage cut (previous
-    * cut freed — at most one rank copy in executor storage). */
-  private def pagerankDistributed(edges: DataFrame, nodes: DataFrame,
-      nNodes: Long, iters: Int, p: Int): DataFrame = {
+  /** Distributed rank loop — the 100 TB path. Each round is one
+    * Pregel-style superstep: one node-keyed exchange, one aggregation,
+    * and the round's eager lineage cut (previous cut freed — at most one
+    * rank copy in executor storage). No join, no broadcast, no
+    * driver-side row processing. */
+  private def pagerankDistributed(edges: DataFrame, nNodes: Long,
+      iters: Int, p: Int): DataFrame = {
     val spark = edges.sparkSession
     val nD = nNodes.toDouble
     val tele = lit((1.0 - Damping) / nD)
-    def fold(arr: Column): Column =
-      aggregate(arr, lit(0.0), (acc, x) => acc + x)
-    // r20 — minimum-exchange loop body (§2.4/§2.6; was ~11 AQE stage
-    // jobs per iteration, now ~5):
-    //  - the dangling-node FLAG is loop-invariant: computed once here
-    //    and carried through every checkpoint as a ranks column, so the
-    //    per-iteration dangling mass is a filter+aggregate over ranks
-    //    instead of an anti-join against a recomputed distinct;
-    //  - every checkpoint is re-pinned at p partitions hash(node)
-    //    (explicit counts are exempt from AQE coalescing; a checkpoint's
-    //    final stage otherwise materializes conf-wide), and the
-    //    checkpointed LogicalRDD PRESERVES that partitioning, so the
-    //    rank-update join needs no exchange on either side;
-    //  - the contribution aggregation repartitions to hash(node, p)
-    //    BEFORE the groupBy — one exchange serving both the aggregation
-    //    and the join/checkpoint layout (§2.4's "two operations keyed
-    //    the same way share one exchange").
-    val outNodes = edges.select(col("from_type").as("node")).distinct()
-    var ranks = nodes
-      .join(outNodes.withColumn("__out", lit(true)), Seq("node"), "left")
-      .select(col("node"), lit(1.0 / nD).as("rank"),
-        coalesce(col("__out"), lit(false)).as("has_out"))
+    // The loop state is (node, rank, has_out, out: array<struct<to_type,
+    // w>>), partitioned hash(node, p). It carries the adjacency, so a
+    // round joins nothing and broadcasts nothing:
+    //  - each node explodes `out` into its contributions rank·w, keyed
+    //    by the destination, and adds one self row carrying `has_out`
+    //    and `out` forward;
+    //  - ONE repartition(p, node) feeds ONE groupBy(node), which folds
+    //    the incoming contributions (from-sorted, left fold from 0.0; a
+    //    node with none folds the empty list to 0.0) and picks up the
+    //    self row's adjacency;
+    //  - the dangling mass (node-sorted fold over !has_out ranks) is an
+    //    observed metric of the round's own checkpoint job, and enters
+    //    the next round as a literal in the same (s/N + inc) operand
+    //    order. The driver receives one double per round.
+    // So a round is two jobs: the exchange's map stage and the cut.
+    // The state is built the same way, once: every edge row offers its
+    // (to_type, w) to its source, every destination offers nothing, and
+    // one node-keyed aggregation collects the out-lists of all nodes.
+    val state0 = edges.select(col("from_type").as("node"),
+        struct(col("to_type"), col("w")).as("e"))
+      .unionByName(edges.select(col("to_type").as("node")),
+        allowMissingColumns = true)
       .repartition(p, col("node"))
-      .localCheckpoint()
-    var lastCutId = org.apache.spark.sql.graft.Bridge.checkpointRddId(ranks)
+      .groupBy(col("node")).agg(collect_list(col("e")).as("out"))
+      .select(col("node"), lit(1.0 / nD).as("rank"),
+        (size(col("out")) > 0).as("has_out"), col("out"))
+    var (ranks, lastCutId, s) = cutRound(state0, iters > 0)
     var k = 0
     while (k < iters) {
-      // dangling mass: pinned fold over node-sorted dangling ranks (1 row)
-      val dang = broadcast(ranks.where(!col("has_out"))
-        .agg(fold(transform(
-          sort_array(collect_list(struct(col("node"), col("rank")))),
-          p => p.getField("rank"))).as("s")))
-      // incoming contributions: pinned fold over from-sorted (rank·w)
-      val inc = edges
-        .join(ranks.select(col("node").as("from_type"), col("rank")),
-          Seq("from_type"))
-        .select(col("to_type").as("node"), col("from_type"),
-          (col("rank") * col("w")).as("c"))
+      val contribs = ranks
+        .select(col("node").as("from_type"), col("rank"),
+          inline(col("out")))
+        .select(col("to_type").as("node"), struct(col("from_type"),
+          (col("rank") * col("w")).as("c")).as("fc"))
+      val self = ranks.select(col("node"), col("has_out"), col("out"))
+      val next = contribs.unionByName(self, allowMissingColumns = true)
         .repartition(p, col("node"))
         .groupBy(col("node"))
-        .agg(fold(transform(
-          sort_array(collect_list(struct(col("from_type"), col("c")))),
-          p => p.getField("c"))).as("inc"))
-      val next = ranks.join(inc, Seq("node"), "left").crossJoin(dang)
+        .agg(pinnedSum(collect_list(col("fc")), "c").as("inc"),
+          first(col("has_out"), ignoreNulls = true).as("has_out"),
+          first(col("out"), ignoreNulls = true).as("out"))
         .select(col("node"),
-          (tele + lit(Damping) *
-            (col("s") / lit(nD) + coalesce(col("inc"), lit(0.0)))).as("rank"),
-          col("has_out"))
-        .localCheckpoint() // eager: bounds plan depth AND double-read
+          (tele + lit(Damping) * (lit(s) / lit(nD) + col("inc"))).as("rank"),
+          col("has_out"), col("out"))
+      val (cut, cutId, sNext) = cutRound(next, k + 1 < iters)
       Corpus.freeCheckpoint(spark, lastCutId)
-      lastCutId = org.apache.spark.sql.graft.Bridge.checkpointRddId(next)
-      ranks = next
+      ranks = cut
+      lastCutId = cutId
+      s = sNext
       k += 1
     }
     // the final cut backs the returned DataFrame — it stays pinned until
@@ -237,6 +221,30 @@ object Graphs {
     // until session end
     pendingCut.set((spark, lastCutId))
     ranks
+  }
+
+  /** Pinned-order float sum: sort the (key, value) structs (UTF-8 key
+    * order first), then fold the `value` fields left from 0.0. */
+  private def pinnedSum(structs: Column, value: String): Column =
+    aggregate(transform(sort_array(structs), x => x.getField(value)),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** Eager lineage cut of one round's state. With `observeDangling` the
+    * dangling mass of the cut's ranks rides the checkpoint job as an
+    * observed metric, read back from that job's own query execution once
+    * it returns; else it is 0.0 and unused. Not an
+    * [[org.apache.spark.sql.Observation]]: that installs a session-wide
+    * query listener, after which every session clone (each `persist()`
+    * makes one) adds a listener to the shared bus until it is collected. */
+  private def cutRound(state: DataFrame, observeDangling: Boolean)
+      : (DataFrame, Option[Int], Double) = {
+    val observed = if (!observeDangling) state
+      else state.observe("dangling", pinnedSum(collect_list(
+        when(!col("has_out"), struct(col("node"), col("rank")))), "rank"))
+    val cut = observed.localCheckpoint() // eager: bounds plan depth
+    val s = if (!observeDangling) 0.0
+      else observed.queryExecution.observedMetrics("dangling").getDouble(0)
+    (cut, org.apache.spark.sql.graft.Bridge.checkpointRddId(cut), s)
   }
 
   /** The distributed loop's final cut, freed on the NEXT pagerank entry
@@ -367,8 +375,8 @@ object Graphs {
   }
 
   /** Fixed-budget MIN-LABEL propagation over an undirected string-keyed
-    * edge list — connected components as a pure fixed-round function
-    * (each round every node takes the minimum of its own and its
+    * edge list (u, v) — connected components as a pure fixed-round
+    * function (each round every node takes the minimum of its own and its
     * neighbors' labels; converges to true components once the budget
     * covers the component diameter, and is a well-defined pure function
     * of the graph at ANY budget — the pagerank/LPA fixed-budget
@@ -377,12 +385,19 @@ object Graphs {
     * per node, so a 2-node component merges in one round (the symmetric
     * pair that synchronous LPA swaps forever on an even budget —
     * discovered by [[TextOps.sourceCommunitiesFrom]]'s spec). String
-    * minima are UTF-8/binary on both engines. Dimension-sized inputs
-    * only (the caller aggregates the corpus first); one equi-join + one
-    * min aggregation per round, lineage cut per round, previous cut
-    * freed. */
+    * minima are UTF-8/binary on both engines. Self-loops and NULL
+    * endpoints are dropped; only nodes with an edge get a label.
+    *
+    * Same scale split as pagerank/LPA: the symmetric edge relation is
+    * built and counted once; at most `driverCap` symmetric edges (both
+    * directions, so the count also bounds the node count) run the rounds
+    * on the driver ([[MaxDriverGraph]] by default; a negative cap forces
+    * the distributed loop even for the empty graph), else a distributed
+    * loop runs one equi-join + one min aggregation per round, lineage
+    * cut per round, previous cut freed. Both paths run exactly `rounds`
+    * synchronous rounds and are identical (spec'd). */
   private[graft] def minLabelComponents(edges: DataFrame,
-      rounds: Int): DataFrame = {
+      rounds: Int, driverCap: Long = MaxDriverGraph): DataFrame = {
     val spark = edges.sparkSession
     freePendingCut()
     val sym0 = edges
@@ -391,10 +406,15 @@ object Graphs {
       .where(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v"))
       .distinct().persist()
+    val nEdges = sym0.count()
+    if (nEdges <= driverCap) {
+      val out = minLabelDriver(spark, sym0, rounds)
+      sym0.unpersist()
+      return out
+    }
     // size the loop relations from the materialized edge count (the
     // pagerank/LPA re-pin, r20) — sym is re-read on v every round,
     // labels 2× per round; dimension-sized inputs land at p = 1
-    val nEdges = sym0.count()
     val conf = spark.sessionState.conf.numShufflePartitions
     val p = Shuffles.sizedPartitions(sym0, nEdges)
     val sym = if (p < conf) sym0.repartition(p, col("v")).persist() else sym0
@@ -425,6 +445,29 @@ object Graphs {
     sym0.unpersist()
     pendingCut.set((spark, lastCutId))
     labels
+  }
+
+  /** Driver twin of the min-label loop: exactly `rounds` synchronous
+    * rounds over the collected symmetric edges, minima in UTF-8 byte
+    * order (never JVM String order). */
+  private def minLabelDriver(spark: SparkSession, sym: DataFrame,
+      rounds: Int): DataFrame = {
+    val nbrs: Map[String, Array[String]] = sym.collect()
+      .map(r => (r.getString(0), r.getString(1)))
+      .groupBy(_._1).map { case (u, es) => u -> es.map(_._2) }
+    val nodeArr = nbrs.keys.toArray.sortWith(utf8Lt)
+    var label: Map[String, String] = nodeArr.map(n => n -> n).toMap
+    var k = 0
+    while (k < rounds) {
+      label = nodeArr.map { v =>
+        v -> nbrs(v).foldLeft(label(v)) { (m, u) =>
+          if (utf8Lt(label(u), m)) label(u) else m
+        }
+      }.toMap
+      k += 1
+    }
+    import spark.implicits._
+    nodeArr.map(n => (n, label(n))).toSeq.toDF("node", "label")
   }
 
   // ----------------------------------------------------------------

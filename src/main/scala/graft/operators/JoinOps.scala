@@ -28,13 +28,6 @@ object JoinOps {
     salted.join(replicated, Seq(key, "__salt")).drop("__salt")
   }
 
-  /** Pre-aggregate-then-join: collapse the fact side to one row per key
-    * before joining a per-key dimension — the shuffle carries |keys| rows
-    * instead of |facts|. `aggs` must be decomposable aggregates. */
-  def aggThenJoin(fact: DataFrame, dim: DataFrame, key: String,
-      aggs: Seq[Column]): DataFrame =
-    fact.groupBy(key).agg(aggs.head, aggs.tail: _*).join(dim, key)
-
   /** Bucketed interval join: all activity inside derived incident
     * windows — the top-K busiest sessions, widened ±margin — counted per
     * window. The window relation has arbitrary, unaligned [start, end]

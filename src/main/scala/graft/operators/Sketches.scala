@@ -220,18 +220,6 @@ object Sketches {
   val CmsDepth = 4
   val CmsWidth = 2048
 
-  /** The d·w counter relation `(i, h, c)` of a count-min sketch over a
-    * single string column `s`. Partial aggregation bounds the shuffle at
-    * d·w rows per map partition — the distributed sketch-merge,
-    * expressed declaratively. */
-  private[graft] def cmsSketch(vals: DataFrame): DataFrame =
-    vals.select(col("s"),
-        explode(array((0 until CmsDepth).map(i => lit(i)): _*)).as("i"))
-      .select(col("i"),
-        md5mod(concat(lit("cms"), col("i").cast("string"), lit(":"), col("s")),
-          CmsWidth.toLong).as("h"))
-      .groupBy(col("i"), col("h")).agg(count(lit(1)).as("c"))
-
   /** ONE-scan combined build of everything the heavy-hitters threshold
     * needs: each value explodes into its d CMS cells plus one HLL
     * register coordinate, and a single map-side-combined groupBy leaves

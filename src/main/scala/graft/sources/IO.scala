@@ -185,10 +185,6 @@ object IO {
   def readJson(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(schema).json(path)
 
-  def readCsv(spark: SparkSession, path: String, schema: StructType,
-      header: Boolean = true): DataFrame =
-    spark.read.schema(schema).option("header", header.toString).csv(path)
-
   def readParquet(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path)
 

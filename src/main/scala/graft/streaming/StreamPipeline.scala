@@ -213,20 +213,4 @@ object StreamPipeline {
         ()
       }
       .start()
-
-  /** File-source deployment shape: stream new parquet drops under `dir`,
-    * aggregate, append to a sink. Used for wiring checks, not the oracle. */
-  def fileStream(spark: SparkSession, dir: String, checkpoint: String,
-      outPath: String): StreamingQuery = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val events = spark.readStream.schema(schema).parquet(dir)
-    windowedCounts(ingestRedact(events))
-      .select(col("w.start").as("window_start"), col("event_type"),
-        col("n_events"), col("total_value"))
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .outputMode("append")
-      .format("parquet")
-      .start(outPath)
-  }
 }

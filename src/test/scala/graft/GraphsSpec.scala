@@ -1,14 +1,16 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.Graphs
+import graft.operators.{Graphs, TextOps}
 
 /** Fixed-budget PageRank: analytic fixed points, probability-mass laws,
   * dangling redistribution, the driver/distributed differential (byte-
-  * identical doubles), degenerate graphs, and the lineage-cut hygiene of
-  * the distributed loop. */
+  * identical doubles), degenerate graphs, the lineage-cut hygiene and
+  * job budget of the distributed loop; the min-label components gate. */
 class GraphsSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
   import SparkTest.Sf
@@ -65,14 +67,27 @@ class GraphsSpec extends AnyFunSuite {
       (s, t, (1 + rng.nextInt(9)).toLong)
     }.groupBy(e => (e._1, e._2))
       .map { case ((s, t), g) => (s, t, g.map(_._3).sum) }.toSeq
-    val drv = Graphs.pagerankOnEdges(edgesDf(es), iters = 10,
-      driverCap = Long.MaxValue).collect().map(r => (r.getString(0),
-        r.getDouble(1))).sortBy(_._1).toSeq
-    val dst = Graphs.pagerankOnEdges(edgesDf(es), iters = 10,
-      driverCap = 0L).collect().map(r => (r.getString(0),
-        r.getDouble(1))).sortBy(_._1).toSeq
+    def both(g: Seq[(String, String, Long)], iters: Int) = {
+      def run(cap: Long) = Graphs.pagerankOnEdges(edgesDf(g), iters,
+        driverCap = cap).collect().map(r => (r.getString(0),
+          r.getDouble(1))).sortBy(_._1).toSeq
+      (run(Long.MaxValue), run(0L))
+    }
+    val (drv, dst) = both(es, 10)
     assert(drv == dst, "driver and distributed ranks must be BYTE-identical")
     assert(math.abs(drv.map(_._2).sum - 1.0) < 1e-5)
+    // iters = 0 returns the initial state's ranks on both paths
+    val (drv0, dst0) = both(es, 0)
+    assert(drv0 == dst0 && drv0.map(_._1) == drv.map(_._1), s"$drv0 vs $dst0")
+    assert(drv0.forall(_._2 == drv0.head._2), s"uniform start: $drv0")
+    // every node has an out-edge: the observed dangling mass is 0.0
+    val ring = nodes.indices.flatMap { i =>
+      Seq((nodes(i), nodes((i + 1) % nodes.size), 1L + i % 3),
+        (nodes(i), nodes((i * 7) % nodes.size), 2L))
+    }.groupBy(e => (e._1, e._2))
+      .map { case ((s, t), g) => (s, t, g.map(_._3).sum) }.toSeq
+    val (drvR, dstR) = both(ring, 10)
+    assert(drvR == dstR, "no-dangling graph: ranks must be BYTE-identical")
   }
 
   test("degenerate graphs: no transitions → empty output-typed result; " +
@@ -100,6 +115,7 @@ class GraphsSpec extends AnyFunSuite {
     val b = Graphs.pagerankFrom(ev, iters = 10, driverCap = 0L)
       .collect().map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq
     assert(a == b, "gate choice must not change a single byte")
+    val hooks = listenerState()
     // each _dist call frees the previous call's final cut: storage is
     // bounded at one pending cut, not one per call
     (1 to 3).foreach { _ =>
@@ -108,6 +124,115 @@ class GraphsSpec extends AnyFunSuite {
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after <= before + 1,
       s"pending-cut storage must not grow per call: $before → $after")
+    // the per-round dangling-mass metric is read from the cut's own
+    // query execution: nothing outlives the call on the listener bus or
+    // in the session (an Observation installs a session listener, after
+    // which every session clone — each persist() — adds a bus listener)
+    assert(listenerState() == hooks,
+      s"listeners/observations must not grow per call: $hooks → ${listenerState()}")
+    assert(hooks._3 == 0, s"no Observation is left pending: $hooks")
+    Graphs.freePendingCut()
+  }
+
+  private def bus: AnyRef = {
+    val sc = spark.sparkContext
+    sc.getClass.getMethod("listenerBus").invoke(sc)
+  }
+
+  private def drainBus(): Unit =
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+
+  /** (SparkContext listeners, QueryExecutionListeners, Observations still
+    * waiting for their metrics) — read through the JVM accessors of
+    * Spark's package-private members. */
+  private def listenerState(): (Int, Int, Int) = {
+    drainBus()
+    val busListeners = bus.getClass.getMethod("listeners").invoke(bus)
+      .asInstanceOf[java.util.List[_]].size
+    val qe = spark.listenerManager.getClass.getMethod("listListeners")
+      .invoke(spark.listenerManager).asInstanceOf[Array[_]].length
+    // the session's ObservationManager is lazy and registers a listener
+    // when built: read the field, never the accessor
+    def field(o: AnyRef, name: String): AnyRef = {
+      val f = o.getClass.getDeclaredField(name)
+      f.setAccessible(true)
+      f.get(o)
+    }
+    val om = field(spark, "observationManager")
+    (busListeners, qe, if (om == null) 0
+      else field(om, "observations").asInstanceOf[java.util.Map[_, _]].size)
+  }
+
+  /** Spark jobs started while `f` runs; the listener bus is drained on
+    * both sides so every job-start event is counted, and only those. */
+  private def jobsOf(f: => Unit): Int = {
+    val n = new AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    drainBus()
+    spark.sparkContext.addSparkListener(l)
+    try { f; drainBus(); n.get }
+    finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("job budget: a distributed PageRank round is at most two Spark " +
+    "jobs; source_communities runs its bounded graph on the driver") {
+    val ev = graft.sources.Tables.events(spark, Sf)
+    def dist(iters: Int) = jobsOf {
+      Graphs.pagerankFrom(ev, iters, driverCap = 0L).collect()
+    }
+    dist(5) // warm: file listing and schema work land outside the pin
+    val (j5, j10) = (dist(5), dist(10))
+    assert(j10 - j5 <= 10,
+      s"5 extra rounds may cost at most 10 jobs: iters 5 → $j5, 10 → $j10")
+    Graphs.freePendingCut()
+    val sc = jobsOf { TextOps.sourceCommunities(spark, Sf).collect() }
+    assert(sc <= 14, s"source_communities ran $sc jobs (27 with the ungated loop)")
+  }
+
+  private def labelsOfMin(g: Seq[(String, String)], rounds: Int,
+      cap: Long): Map[String, String] = {
+    import spark.implicits._
+    val out = Graphs.minLabelComponents(g.toDF("u", "v"), rounds, cap)
+    assert(out.columns.toSeq == Seq("node", "label"))
+    labelsOf(out)
+  }
+
+  test("min-label components: driver path equals the forced-distributed " +
+    "loop — fixed budget, not components; symmetric pair; self-loops, " +
+    "NULL endpoints and supplementary-plane names in UTF-8 order") {
+    // a path p0-…-p9 longer than the budget: after 3 rounds p9 has seen
+    // only p6..p9, so its label is p6, not the component's p0
+    val path = (0 until 9).map(i => (s"p$i", s"p${i + 1}"))
+    // U+FF5E sorts BELOW U+1F600 in UTF-8 (EF… < F0…) but ABOVE it in
+    // UTF-16 (FF5E > D83D): a JVM-String minimum would pick the emoji
+    val (bmp, astral) = ("\uFF5E", "\uD83D\uDE00")
+    val fixed = path ++ Seq(("x", "y"), ("y", "x"), ("s", "s"),
+      ("p3", "p3"), (null, "p5"), ("q", null), (astral, bmp))
+    val rng = new scala.util.Random(31)
+    val names = (0 until 24).map(i =>
+      if (i % 3 == 0) s"$astral$i" else if (i % 3 == 1) s"$bmp$i" else s"n$i")
+    val seeded = fixed ++ (0 until 40).map { _ =>
+      val a = if (rng.nextInt(10) == 0) null else names(rng.nextInt(24))
+      (a, names(rng.nextInt(24)))
+    }
+    for (g <- Seq(fixed, seeded); rounds <- Seq(1, 3, 6)) {
+      val drv = labelsOfMin(g, rounds, Long.MaxValue)
+      val dst = labelsOfMin(g, rounds, -1L)
+      assert(drv == dst, s"rounds $rounds: driver $drv vs distributed $dst")
+    }
+    Graphs.freePendingCut()
+    val l = labelsOfMin(fixed, 3, Long.MaxValue)
+    assert(l("p9") == "p6" && l("p3") == "p0", s"fixed budget: $l")
+    assert(l("x") == "x" && l("y") == "x", s"symmetric pair merges: $l")
+    assert(!l.contains("s") && !l.contains("q") && !l.contains(null),
+      s"self-loop-only and NULL-paired nodes get no label: $l")
+    assert(l(astral) == bmp && l(bmp) == bmp, s"UTF-8 minimum: $l")
+    // empty graph on both paths: empty, output-typed
+    assert(labelsOfMin(Seq.empty, 3, Long.MaxValue).isEmpty)
+    assert(labelsOfMin(Seq.empty, 3, -1L).isEmpty)
     Graphs.freePendingCut()
   }
 
