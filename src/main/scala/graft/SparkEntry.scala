@@ -630,9 +630,10 @@ object SparkEntry extends OracleHelpersA with OracleHelpersB
     // model is an exact integer-count function, fully SQL-replayable
     "quality_nb"            -> ((s: SparkSession, d: String) =>
       Corpus.qualityNb(s, d)),
-    // LPA communities over the source-overlap graph — two r16 operators
-    // composed through one shared gram relation; edges by the exact
-    // integer Jaccard >= 1/10 test
+    // fixed-budget min-label communities over the source-overlap graph
+    // (not weighted LPA: see TextOps.sourceCommunities) — two r16
+    // operators composed through one shared gram relation; edges by the
+    // exact integer Jaccard >= 1/10 test
     "source_communities"    -> ((s: SparkSession, d: String) =>
       TextOps.sourceCommunities(s, d)),
     // per-column profiling (row/NULL/exact-distinct counts) — the

@@ -29,7 +29,8 @@ import graft.sources.Tables
   *  - above the cap (web-scale link graphs) the DISTRIBUTED loop takes
   *    over: per iteration one Pregel-style superstep over a rank state
   *    that carries each node's out-adjacency — one node-keyed exchange
-  *    and aggregation, the dangling mass observed on the same job —
+  *    and aggregation of messages, the dangling mass folded at a sink key
+  *    on an executor and observed on the round's cut job —
   *    lineage cut per round (eager localCheckpoint, previous cut freed —
   *    the BPE trainer protocol) so plan depth stays O(1) in the
   *    iteration budget. No driver-side row processing above the gate.
@@ -52,10 +53,11 @@ object Graphs {
   val Damping = 0.85
   val DefaultIters = 10
 
-  /** nodes + edges above which the rank loop stays distributed. Sized
-    * like [[Cluster]]'s edge gate: a graph this small iterates faster on
-    * the driver than one Spark job schedules; a web-scale graph never
-    * comes near it. */
+  /** Graph size up to which a loop iterates on the driver: PageRank and
+    * min-label components count edges (a graph has at most twice as many
+    * nodes), label propagation nodes + edges. Sized like [[Cluster]]'s
+    * edge gate: a graph this small iterates faster on the driver than one
+    * Spark job schedules; a web-scale graph never comes near it. */
   private[graft] val MaxDriverGraph = 1000000L
 
   /** PageRank over the directed event-type transition graph: nodes are
@@ -74,8 +76,8 @@ object Graphs {
   }
 
   /** The generic core: PageRank over any aggregated multigraph
-    * (from_type, to_type, n). Returns (node, rank) with rank rounded to
-    * 6 decimals at the output only. */
+    * (from_type, to_type, n) with non-NULL endpoints. Returns
+    * (node, rank) with rank rounded to 6 decimals at the output only. */
   private[graft] def pagerankOnEdges(edgeCounts: DataFrame, iters: Int,
       driverCap: Long): DataFrame = {
     val spark = edgeCounts.sparkSession
@@ -97,14 +99,11 @@ object Graphs {
       // no transitions (degenerate corpora): empty, output-typed
       return emptyRanks(spark)
     }
-    val nodes = edges.select(col("from_type").as("node"))
-      .union(edges.select(col("to_type").as("node"))).distinct().persist()
-    val nNodes = nodes.count()
     val out =
-      if (nNodes + nEdges <= driverCap) pagerankDriver(spark, edges, nodes, iters)
-      else pagerankDistributed(edges, nNodes, iters,
-        Shuffles.sizedPartitions(edges, nNodes + nEdges))
-    edges.unpersist(); nodes.unpersist()
+      if (nEdges <= driverCap) pagerankDriver(spark, edges, iters)
+      else pagerankDistributed(edges, iters,
+        Shuffles.sizedPartitions(edges, nEdges))
+    edges.unpersist()
     out.select(col("node"), round(col("rank"), 6).as("rank"))
   }
 
@@ -127,10 +126,10 @@ object Graphs {
   /** Driver twin — op-order identical to [[pagerankDistributed]] and the
     * SQL oracle: pinned left folds from 0.0 over UTF-8-sorted keys. */
   private def pagerankDriver(spark: SparkSession, edges: DataFrame,
-      nodes: DataFrame, iters: Int): DataFrame = {
+      iters: Int): DataFrame = {
     val eArr = edges.collect().map(r =>
       (r.getString(0), r.getString(1), r.getDouble(2)))
-    val nodeArr = nodes.collect().map(_.getString(0)).sortWith(utf8Lt)
+    val nodeArr = (eArr.map(_._1) ++ eArr.map(_._2)).distinct.sortWith(utf8Lt)
     val nD = nodeArr.length.toDouble
     val outNodes = eArr.map(_._1).toSet
     val inEdges: Map[String, Array[(String, Double)]] = eArr
@@ -156,71 +155,97 @@ object Graphs {
   }
 
   /** Distributed rank loop — the 100 TB path. Each round is one
-    * Pregel-style superstep: one node-keyed exchange, one aggregation,
-    * and the round's eager lineage cut (previous cut freed — at most one
-    * rank copy in executor storage). No join, no broadcast, no
-    * driver-side row processing. */
-  private def pagerankDistributed(edges: DataFrame, nNodes: Long,
-      iters: Int, p: Int): DataFrame = {
+    * Pregel-style superstep: one node-keyed exchange and aggregation of
+    * messages, and the round's eager lineage cut (previous cut freed — at
+    * most one rank copy in executor storage). No join, no broadcast, and
+    * the driver receives one double per round. */
+  private def pagerankDistributed(edges: DataFrame, iters: Int,
+      p: Int): DataFrame = {
     val spark = edges.sparkSession
-    val nD = nNodes.toDouble
-    val tele = lit((1.0 - Damping) / nD)
-    // The loop state is (node, rank, has_out, out: array<struct<to_type,
-    // w>>), partitioned hash(node, p). It carries the adjacency, so a
-    // round joins nothing and broadcasts nothing:
-    //  - each node explodes `out` into its contributions rank·w, keyed
-    //    by the destination, and adds one self row carrying `has_out`
-    //    and `out` forward;
-    //  - ONE repartition(p, node) feeds ONE groupBy(node), which folds
-    //    the incoming contributions (from-sorted, left fold from 0.0; a
-    //    node with none folds the empty list to 0.0) and picks up the
-    //    self row's adjacency;
-    //  - the dangling mass (node-sorted fold over !has_out ranks) is an
-    //    observed metric of the round's own checkpoint job, and enters
-    //    the next round as a literal in the same (s/N + inc) operand
-    //    order. The driver receives one double per round.
-    // So a round is two jobs: the exchange's map stage and the cut.
-    // The state is built the same way, once: every edge row offers its
-    // (to_type, w) to its source, every destination offers nothing, and
-    // one node-keyed aggregation collects the out-lists of all nodes.
-    val state0 = edges.select(col("from_type").as("node"),
+    // The out-adjacency (node, out: array<struct<to_type, w>>), built
+    // once by one node-keyed aggregation; destinations without out-edges
+    // get an empty list, so its count is N.
+    val adj = edges.select(col("from_type").as("node"),
         struct(col("to_type"), col("w")).as("e"))
       .unionByName(edges.select(col("to_type").as("node")),
         allowMissingColumns = true)
       .repartition(p, col("node"))
       .groupBy(col("node")).agg(collect_list(col("e")).as("out"))
-      .select(col("node"), lit(1.0 / nD).as("rank"),
-        (size(col("out")) > 0).as("has_out"), col("out"))
-    var (ranks, lastCutId, s) = cutRound(state0, iters > 0)
+      .persist()
+    val nD = adj.count().toDouble
+    val tele = lit((1.0 - Damping) / nD)
+    if (iters == 0) {
+      val cut = adj.select(col("node"), lit(1.0 / nD).as("rank"))
+        .localCheckpoint()
+      adj.unpersist()
+      pendingCut.set((spark, org.apache.spark.sql.graft.Bridge.checkpointRddId(cut)))
+      return cut
+    }
+    // The state between rounds is the cut (node, inc, out). A node's
+    // rank is rank(s) over it, s being the previous round's dangling
+    // mass, in the oracle's (s/N + inc) operand order. A round:
+    //  - turns every node into messages (node, sink, from_type, c): one
+    //    rank·w per out-edge, keyed by the destination, and for a node
+    //    without out-edges (node, rank) keyed by the sink; plus one self
+    //    row carrying `out` forward, so every node keeps its adjacency
+    //    and gets a rank even without in-edges;
+    //  - runs ONE repartition(p, node) + groupBy(node, sink) with the
+    //    pinned fold over sorted (from_type, c): each node's `inc` (the
+    //    empty list folds to 0.0), and at the sink the dangling mass over
+    //    node-sorted ranks. That fold runs on an executor; the driver
+    //    reads its one double as an observed metric of the cut job.
+    // So a round is two jobs: the exchange's map stage and the cut.
+    // Trade-off: the self rows ship the adjacency through every exchange
+    // and every cut stores it. On a 100k-node, ~450k-edge graph (local[2],
+    // 8 shuffle partitions) a round writes 15.4 MB of shuffle in 2 jobs;
+    // the join-based loop this replaced wrote 11.8 MB in 6 jobs. Past the
+    // driver gate rounds are byte-bound, so a compact adjacency (dense
+    // UTF-8-ordered node ids) is the next step there (ROADMAP item 2).
+    def rank(s: Double): Column =
+      tele + lit(Damping) * (lit(s) / lit(nD) + col("inc"))
+    def msg(key: Column, sink: Boolean, from: Column, c: Column): Column =
+      struct(key.as("node"), lit(sink).as("sink"), from.as("from_type"),
+        c.as("c"))
+    var ranks = adj.select(col("node"), lit(1.0 / nD).as("rank"), col("out"))
+    var state: DataFrame = null
+    var lastCutId: Option[Int] = None
+    var s = 0.0
     var k = 0
     while (k < iters) {
-      val contribs = ranks
-        .select(col("node").as("from_type"), col("rank"),
-          inline(col("out")))
-        .select(col("to_type").as("node"), struct(col("from_type"),
-          (col("rank") * col("w")).as("c")).as("fc"))
-      val self = ranks.select(col("node"), col("has_out"), col("out"))
-      val next = contribs.unionByName(self, allowMissingColumns = true)
+      val msgs = ranks.select(inline(concat(
+        transform(col("out"), e => msg(e.getField("to_type"), sink = false,
+          col("node"), col("rank") * e.getField("w"))),
+        filter(array(msg(lit(null).cast("string"), sink = true,
+          col("node"), col("rank"))), _ => size(col("out")) === 0))))
+      val self = ranks.select(col("node"), lit(false).as("sink"), col("out"))
+      val next = msgs.unionByName(self, allowMissingColumns = true)
         .repartition(p, col("node"))
-        .groupBy(col("node"))
-        .agg(pinnedSum(collect_list(col("fc")), "c").as("inc"),
-          first(col("has_out"), ignoreNulls = true).as("has_out"),
+        .groupBy(col("node"), col("sink"))
+        .agg(pinnedSum(collect_list(when(col("c").isNotNull,
+            struct(col("from_type"), col("c")))), "c").as("inc"),
           first(col("out"), ignoreNulls = true).as("out"))
-        .select(col("node"),
-          (tele + lit(Damping) * (lit(s) / lit(nD) + col("inc"))).as("rank"),
-          col("has_out"), col("out"))
-      val (cut, cutId, sNext) = cutRound(next, k + 1 < iters)
+        .observe("dangling", max(when(col("sink"), col("inc"))))
+        .where(!col("sink"))
+        .select(col("node"), col("inc"), col("out"))
+      val cut = next.localCheckpoint() // eager: bounds plan depth
+      // read from the cut's own query execution, not an Observation
+      // (that installs a session-wide listener, and every session clone,
+      // which each persist() makes, then adds one to the shared bus); no
+      // sink group (every node has an out-edge) is the empty fold, 0.0
+      val dm = next.queryExecution.observedMetrics("dangling")
+      s = if (dm.isNullAt(0)) 0.0 else dm.getDouble(0)
+      if (k == 0) adj.unpersist()
       Corpus.freeCheckpoint(spark, lastCutId)
-      ranks = cut
-      lastCutId = cutId
-      s = sNext
+      lastCutId = org.apache.spark.sql.graft.Bridge.checkpointRddId(cut)
+      state = cut
+      ranks = state.select(col("node"), rank(s).as("rank"), col("out"))
       k += 1
     }
     // the final cut backs the returned DataFrame — it stays pinned until
     // the next pagerank entry (or an explicit freePendingCut), never
     // until session end
     pendingCut.set((spark, lastCutId))
-    ranks
+    state.select(col("node"), rank(s).as("rank"))
   }
 
   /** Pinned-order float sum: sort the (key, value) structs (UTF-8 key
@@ -228,24 +253,6 @@ object Graphs {
   private def pinnedSum(structs: Column, value: String): Column =
     aggregate(transform(sort_array(structs), x => x.getField(value)),
       lit(0.0), (acc, x) => acc + x)
-
-  /** Eager lineage cut of one round's state. With `observeDangling` the
-    * dangling mass of the cut's ranks rides the checkpoint job as an
-    * observed metric, read back from that job's own query execution once
-    * it returns; else it is 0.0 and unused. Not an
-    * [[org.apache.spark.sql.Observation]]: that installs a session-wide
-    * query listener, after which every session clone (each `persist()`
-    * makes one) adds a listener to the shared bus until it is collected. */
-  private def cutRound(state: DataFrame, observeDangling: Boolean)
-      : (DataFrame, Option[Int], Double) = {
-    val observed = if (!observeDangling) state
-      else state.observe("dangling", pinnedSum(collect_list(
-        when(!col("has_out"), struct(col("node"), col("rank")))), "rank"))
-    val cut = observed.localCheckpoint() // eager: bounds plan depth
-    val s = if (!observeDangling) 0.0
-      else observed.queryExecution.observedMetrics("dangling").getDouble(0)
-    (cut, org.apache.spark.sql.graft.Bridge.checkpointRddId(cut), s)
-  }
 
   /** The distributed loop's final cut, freed on the NEXT pagerank entry
     * (the result DataFrame may still be consumed after return — freeing
@@ -389,34 +396,45 @@ object Graphs {
     * endpoints are dropped; only nodes with an edge get a label.
     *
     * Same scale split as pagerank/LPA: the symmetric edge relation is
-    * built and counted once; at most `driverCap` symmetric edges (both
-    * directions, so the count also bounds the node count) run the rounds
-    * on the driver ([[MaxDriverGraph]] by default; a negative cap forces
-    * the distributed loop even for the empty graph), else a distributed
-    * loop runs one equi-join + one min aggregation per round, lineage
-    * cut per round, previous cut freed. Both paths run exactly `rounds`
+    * built and counted once; at most [[MaxDriverGraph]] symmetric edges
+    * (both directions, so the count also bounds the node count) run the
+    * rounds on the driver ([[minLabelDriver]]), else
+    * [[minLabelDistributed]] runs them. Both run exactly `rounds`
     * synchronous rounds and are identical (spec'd). */
   private[graft] def minLabelComponents(edges: DataFrame,
-      rounds: Int, driverCap: Long = MaxDriverGraph): DataFrame = {
-    val spark = edges.sparkSession
+      rounds: Int): DataFrame = {
     freePendingCut()
-    val sym0 = edges
+    val sym = symmetricEdges(edges).persist()
+    val out =
+      if (sym.count() <= MaxDriverGraph)
+        minLabelDriver(edges.sparkSession, sym, rounds)
+      else minLabelDistributed(sym, rounds)
+    sym.unpersist()
+    out
+  }
+
+  /** Both directions of every edge, NULL endpoints and self-loops
+    * dropped, distinct — the relation both min-label twins read. */
+  private[graft] def symmetricEdges(edges: DataFrame): DataFrame =
+    edges
       .select(col("u"), col("v"))
       .unionByName(edges.select(col("v").as("u"), col("u").as("v")))
       .where(col("u").isNotNull && col("v").isNotNull &&
         col("u") =!= col("v"))
-      .distinct().persist()
-    val nEdges = sym0.count()
-    if (nEdges <= driverCap) {
-      val out = minLabelDriver(spark, sym0, rounds)
-      sym0.unpersist()
-      return out
-    }
-    // size the loop relations from the materialized edge count (the
-    // pagerank/LPA re-pin, r20) — sym is re-read on v every round,
-    // labels 2× per round; dimension-sized inputs land at p = 1
+      .distinct()
+
+  /** Distributed twin of the min-label loop over [[symmetricEdges]]: one
+    * equi-join + one min aggregation per round, lineage cut per round,
+    * previous cut freed, the final cut pending until the next call. */
+  private[graft] def minLabelDistributed(sym0: DataFrame,
+      rounds: Int): DataFrame = {
+    val spark = sym0.sparkSession
+    freePendingCut()
+    // size the loop relations from the edge count (the pagerank/LPA
+    // re-pin, r20) — sym is re-read on v every round, labels 2× per
+    // round; dimension-sized inputs land at p = 1
     val conf = spark.sessionState.conf.numShufflePartitions
-    val p = Shuffles.sizedPartitions(sym0, nEdges)
+    val p = Shuffles.sizedPartitions(sym0, sym0.count())
     val sym = if (p < conf) sym0.repartition(p, col("v")).persist() else sym0
     val nodes = sym.select(col("u").as("node")).distinct()
     var labels = nodes.select(col("node"), col("node").as("label"))
@@ -442,7 +460,6 @@ object Graphs {
       k += 1
     }
     if (sym ne sym0) sym.unpersist()
-    sym0.unpersist()
     pendingCut.set((spark, lastCutId))
     labels
   }
@@ -450,7 +467,7 @@ object Graphs {
   /** Driver twin of the min-label loop: exactly `rounds` synchronous
     * rounds over the collected symmetric edges, minima in UTF-8 byte
     * order (never JVM String order). */
-  private def minLabelDriver(spark: SparkSession, sym: DataFrame,
+  private[graft] def minLabelDriver(spark: SparkSession, sym: DataFrame,
       rounds: Int): DataFrame = {
     val nbrs: Map[String, Array[String]] = sym.collect()
       .map(r => (r.getString(0), r.getString(1)))

@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -192,10 +192,43 @@ class GraphsSpec extends AnyFunSuite {
     assert(sc <= 14, s"source_communities ran $sc jobs (27 with the ungated loop)")
   }
 
+  test("distributed PageRank folds the dangling mass on an executor: task " +
+    "results do not grow with the number of dangling nodes") {
+    // hubs h0..h9 in a ring, each pointing at `leaves` dangling leaves
+    def star(leaves: Int) = (0 until 10).flatMap { h =>
+      (s"h$h", s"h${(h + 1) % 10}", 1L) +:
+        (0 until leaves).map(i => (s"h$h", f"leaf$h%d_$i%04d", 1L))
+    }
+    // the largest serialized task result while the rank loop runs (the
+    // loop is eager; the lazy output is never read back here)
+    def maxTaskResult(leaves: Int): Long = {
+      val m = new java.util.concurrent.atomic.AtomicLong(0L)
+      val l = new SparkListener {
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (e.taskMetrics != null)
+            m.accumulateAndGet(e.taskMetrics.resultSize, math.max)
+      }
+      val g = edgesDf(star(leaves))
+      drainBus()
+      spark.sparkContext.addSparkListener(l)
+      try { Graphs.pagerankOnEdges(g, iters = 3, driverCap = 0L); drainBus() }
+      finally spark.sparkContext.removeSparkListener(l)
+      Graphs.freePendingCut()
+      m.get
+    }
+    val (few, many) = (maxTaskResult(2), maxTaskResult(400))
+    // 4000 (node, rank) pairs are > 60 KB; the observed mass is one double
+    assert(many < few + 8192,
+      s"task results grew with the dangling set: 20 → $few B, 4000 → $many B")
+  }
+
+  /** One min-label twin on `g`: the driver loop, else the distributed. */
   private def labelsOfMin(g: Seq[(String, String)], rounds: Int,
-      cap: Long): Map[String, String] = {
+      driver: Boolean): Map[String, String] = {
     import spark.implicits._
-    val out = Graphs.minLabelComponents(g.toDF("u", "v"), rounds, cap)
+    val sym = Graphs.symmetricEdges(g.toDF("u", "v"))
+    val out = if (driver) Graphs.minLabelDriver(spark, sym, rounds)
+      else Graphs.minLabelDistributed(sym, rounds)
     assert(out.columns.toSeq == Seq("node", "label"))
     labelsOf(out)
   }
@@ -219,20 +252,22 @@ class GraphsSpec extends AnyFunSuite {
       (a, names(rng.nextInt(24)))
     }
     for (g <- Seq(fixed, seeded); rounds <- Seq(1, 3, 6)) {
-      val drv = labelsOfMin(g, rounds, Long.MaxValue)
-      val dst = labelsOfMin(g, rounds, -1L)
+      val drv = labelsOfMin(g, rounds, driver = true)
+      val dst = labelsOfMin(g, rounds, driver = false)
       assert(drv == dst, s"rounds $rounds: driver $drv vs distributed $dst")
     }
     Graphs.freePendingCut()
-    val l = labelsOfMin(fixed, 3, Long.MaxValue)
+    // the entry gates this graph onto the driver twin
+    import spark.implicits._
+    val l = labelsOf(Graphs.minLabelComponents(fixed.toDF("u", "v"), 3))
     assert(l("p9") == "p6" && l("p3") == "p0", s"fixed budget: $l")
     assert(l("x") == "x" && l("y") == "x", s"symmetric pair merges: $l")
     assert(!l.contains("s") && !l.contains("q") && !l.contains(null),
       s"self-loop-only and NULL-paired nodes get no label: $l")
     assert(l(astral) == bmp && l(bmp) == bmp, s"UTF-8 minimum: $l")
     // empty graph on both paths: empty, output-typed
-    assert(labelsOfMin(Seq.empty, 3, Long.MaxValue).isEmpty)
-    assert(labelsOfMin(Seq.empty, 3, -1L).isEmpty)
+    assert(labelsOfMin(Seq.empty, 3, driver = true).isEmpty)
+    assert(labelsOfMin(Seq.empty, 3, driver = false).isEmpty)
     Graphs.freePendingCut()
   }
 
