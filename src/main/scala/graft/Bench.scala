@@ -1,6 +1,5 @@
 package graft
 import java.util.Locale
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line of per-query seconds.
@@ -25,22 +24,7 @@ object Bench {
     val wallStart = System.nanoTime()
     def elapsedSec: Double = (System.nanoTime() - wallStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // The audited global-window sites are bounded by design (day grids,
-    // limit-k survivors, cutpoint samples — PlanShapeSpec pins their
-    // measured cardinality); their per-execution "No Partition Defined"
-    // warning is pure noise here and buries real warnings in the bench
-    // log. Silenced for this MAIN only — the library never mutes logs.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession("WARN")
     // optional comma-separated query filter for LOCAL A/B runs (the
     // driver never sets it, so official records always cover the full
     // registry): isolates one query's cost from suite neighbors when
@@ -71,10 +55,7 @@ object Bench {
     // and surfaced in a "failed" field instead.
     val failed = scala.collection.mutable.SortedSet[String]()
     def suitePass(): Map[String, Double] = {
-      graft.operators.NearDup.releaseCache(spark)
-      graft.operators.Embeddings.releaseCache(spark)
-      graft.operators.Corpus.releaseCache(spark)
-      graft.operators.Relational.releaseCache(spark)
+      SessionCache.releaseScratch(spark)
       names.map { name =>
         // once failed, a query's timings can never enter the medians —
         // don't burn wall-clock re-running it in later passes

@@ -1,6 +1,5 @@
 package graft
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: write `plans/<round>/<query>_<suffix>.txt` formatted plans
   * for the named queries under the EXACT bench session shape, so the
@@ -14,17 +13,7 @@ object DumpPlans {
     val suffix = args(1)
     val names = args.drop(2).toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession("ERROR")
     Files.createDirectories(Paths.get(outDir))
     for (q <- names) {
       val txt = try SparkEntry.queries(q)(spark, sfDir).queryExecution

@@ -1,31 +1,19 @@
 package graft
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: per-query cost profile under the EXACT bench session shape
-  * (local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, UTC, noop sink).
-  * For each named query: sf0.001 warmup, then N timed runs at
-  * $SPARK_GRAFT_SF_DIR with the session memos released before each run
+  * ([[LocalSession]], noop sink). For each named query: sf0.001 warmup,
+  * then N timed runs at $SPARK_GRAFT_SF_DIR with the [[SessionCache]]
+  * scratch lifetime released before each run
   * (the bench's steady-state cost model), reporting seconds plus the
   * Spark job / stage / task counts — the split that tells scheduling
   * overhead apart from real work. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val runs = sys.env.getOrElse("SPARK_GRAFT_PROFILE_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_PROFILE_LOGLEVEL", "ERROR"))
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession("ERROR")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicLong(0L)
@@ -45,12 +33,7 @@ object Profile {
     })
     val names = if (args.nonEmpty) args.toSeq.flatMap(_.split(',')).filter(_.nonEmpty)
                 else SparkEntry.queries.keys.toSeq.sorted
-    def release(): Unit = {
-      graft.operators.NearDup.releaseCache(spark)
-      graft.operators.Embeddings.releaseCache(spark)
-      graft.operators.Corpus.releaseCache(spark)
-      graft.operators.Relational.releaseCache(spark)
-    }
+    def release(): Unit = SessionCache.releaseScratch(spark)
     for (q <- names) {
       val fn = SparkEntry.queries(q)
       try fn(spark, "/root/testdata/sf0.001").write.format("noop").mode("overwrite").save()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: scaling-behavior evidence. Replicates the sf0.1 tables ×N
@@ -18,11 +18,7 @@ object ScaleProbe {
     val only = args.drop(1).toSet
     def want(name: String): Boolean = only.isEmpty || only(name)
     val dir = "/root/testdata/sf0.1"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession("ERROR")
     import graft.sources.Tables
 
     def replicate(df: DataFrame, idCol: String, n: Int): DataFrame = {

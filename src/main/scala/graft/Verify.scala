@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,7 @@ object Verify {
     // optional query-name filter (args 2..) for fast local iteration;
     // the driver passes exactly two args and gets the full dump
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bounded-window warnings are audited noise (see Bench) — silence
-    // for this main only, the library never mutes logs
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    val spark = LocalSession("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }

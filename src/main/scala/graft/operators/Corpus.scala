@@ -12,30 +12,21 @@ import graft.functions.TextFns
   */
 object Corpus {
 
-  /** Session-scoped cache of the persisted vocabulary (the
-    * NearDup.memoBase pattern): build_vocab, encode_tokens, and
-    * quality_perplexity all read the same frequency-ranked vocab, and
+  /** Session-scoped cache of the persisted vocabulary (a
+    * [[graft.SessionCache]] scratch entry): build_vocab, encode_tokens,
+    * and quality_perplexity all read the same frequency-ranked vocab, and
     * without the memo each consumer re-ran the corpus-wide explode+count.
     * One full-corpus token aggregation per (session, corpus, minCount,
     * maxVocab); entries are ≤ maxVocab rows. Released via
     * [[releaseCache]] (or session end). */
-  // keyed on the (session, dir, minCount, maxVocab) TUPLE, never an
-  // interpolated "$dir:$minCount" string: a dir whose name happens to end
-  // in ':N' must not share a cache entry with a different parameter point
-  private val vocabMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Int, Int), DataFrame]
+  private val vocabMemo =
+    graft.SessionCache.scratch[(String, Int, Int), DataFrame](_.unpersist())
 
-  /** Unpersist and drop every vocabulary and BPE state cached for
-    * `spark`. */
-  def releaseCache(spark: SparkSession): Unit = {
-    vocabMemo.filterInPlace { case ((s, _, _, _), df) =>
-      if (s eq spark) { df.unpersist(); false } else true
-    }
-    bpeMemo.filterInPlace { case ((s, _, _), (_, df, cutId)) =>
-      if (s eq spark) { df.unpersist(); freeCheckpoint(s, cutId); false }
-      else true
-    }
-  }
+  /** Releases the whole scratch lifetime of `spark`
+    * ([[graft.SessionCache.releaseScratch]]), not only vocabularies and
+    * BPE states. */
+  def releaseCache(spark: SparkSession): Unit =
+    graft.SessionCache.releaseScratch(spark)
 
   /** Frequency-ranked vocabulary. The explode+count phase is map-side
     * combined over the corpus; the survivors are cut to `maxVocab` with a
@@ -49,9 +40,7 @@ object Corpus {
     */
   def buildVocab(spark: SparkSession, dir: String, minCount: Int = 2,
       maxVocab: Int = 1000): DataFrame = {
-    // evict entries of stopped sessions (see NearDup.memoBase)
-    vocabMemo.filterInPlace { case ((s, _, _, _), _) => !s.sparkContext.isStopped }
-    vocabMemo.getOrElseUpdate((spark, dir, minCount, maxVocab),
+    vocabMemo(spark, (dir, minCount, maxVocab))(
       vocabFrom(Tables.documents(spark, dir), minCount, maxVocab).persist())
   }
 
@@ -1592,16 +1581,19 @@ object Corpus {
 
   /** Session memo of a trained BPE state per (corpus, merges): the merge
     * table plus the fully-merged word dictionary (persisted — bpe_train
-    * and bpe_encode share one training run, the [[vocabMemo]] pattern).
+    * and bpe_encode share one training run), a [[graft.SessionCache]]
+    * scratch entry.
     * The third slot is the distributed trainer's FINAL lineage-cut RDD id
     * (None on the driver path): the persisted dictionary may read through
     * that checkpoint on recompute, so it stays pinned for the entry's
-    * lifetime and is freed with the entry — without it one dictionary
+    * lifetime and is freed by the entry's release — without it one dictionary
     * copy per (session, dir, merges ≥ [[BpeCutEvery]]) leaked until
     * session end. */
-  private val bpeMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Int),
-    (Seq[(Int, String, String, Long)], DataFrame, Option[Int])]
+  private[graft] val bpeMemo = graft.SessionCache.scratch[(String, Int),
+    (Seq[(Int, String, String, Long)], DataFrame, Option[Int])] {
+    case (_, dict, cutId) =>
+      dict.unpersist(); freeCheckpoint(dict.sparkSession, cutId)
+  }
 
   /** Drop a lineage-cut checkpoint RDD's storage (no-op for None or a
     * stopped session — stopping already released executor storage). */
@@ -1613,15 +1605,14 @@ object Corpus {
 
   private def bpeMemoized(spark: SparkSession, dir: String, merges: Int)
       : (Seq[(Int, String, String, Long)], DataFrame) = {
-    bpeMemo.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    val (tab, dict, _) = bpeMemo.getOrElseUpdate((spark, dir, merges), {
+    val (tab, dict, _) = bpeMemo(spark, (dir, merges)) {
       val (tab, dict0, dictN, lastCut) = bpeTrainCore(
         Tables.documents(spark, dir), merges)
       val persisted = dictN.persist()
       persisted.count() // materialize before the training lineage is cut
       dict0.unpersist()
       (tab, persisted, lastCut)
-    })
+    }
     (tab, dict)
   }
 

@@ -43,8 +43,7 @@ object Dsar {
   private case class Stores(z: String, lex: String, ivf: String,
       sig: String, hll: String, before: Map[String, Long])
 
-  private val memo = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String), Stores]
+  private val memo = graft.SessionCache.store[String, Stores]
 
   /** One (store, after, subj) evidence relation across all five stores —
     * r20, §2.6/§5: the evidence pass previously issued ~12 SEQUENTIAL
@@ -113,16 +112,9 @@ object Dsar {
     * all of them (each leg + its replay + physical compaction), and
     * remember the pre-erasure entity counts. Once per (session, dir) —
     * the erased-store entries' memoization convention. */
-  private def buildAndErase(spark: SparkSession, dir: String): Stores = {
-    memo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    memo.getOrElseUpdate((spark, dir), {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(64)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val nonce = java.lang.Long.toHexString(
-        new java.security.SecureRandom().nextLong())
-      val root = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_dsar_${safe}_${key}_$nonce").getAbsolutePath
+  private def buildAndErase(spark: SparkSession, dir: String): Stores =
+    memo(spark, dir) {
+      val root = graft.SessionCache.storePath("graft_dsar", dir)
       val (z, lex, ivf, sig, hll) =
         (s"$root/z", s"$root/lex", s"$root/ivf", s"$root/sig", s"$root/hll")
       val ev = Tables.events(spark, dir)
@@ -164,8 +156,7 @@ object Dsar {
       Embeddings.compactIvfIndex(spark, ivf)
       NearDup.compactSignatureIndex(spark, sig)
       Stores(z, lex, ivf, sig, hll, before)
-    })
-  }
+    }
 
   /** The registered `dsar_execute` query: the evidence relation of the
     * one-request multi-store DSAR — per store, entities removed

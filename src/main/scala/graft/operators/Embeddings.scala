@@ -228,34 +228,24 @@ object Embeddings {
     */
   /** Session-scoped memo of the persisted IVF assignment: ann_ivf and
     * dedup_embedding share one k-means fit + assignment per corpus instead
-    * of each training their own. Release via [[releaseCache]]. */
-  private val ivfMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String, Int), (DataFrame, DataFrame)]
+    * of each training their own. A [[graft.SessionCache]] scratch entry,
+    * released via [[releaseCache]]. */
+  private val ivfMemo = graft.SessionCache.scratch[(String, Int),
+    (DataFrame, DataFrame)] { case (assigned, _) => assigned.unpersist() }
 
-  /** Unpersist and drop every IVF assignment and LSH signature base cached
-    * for `spark`. */
-  def releaseCache(spark: SparkSession): Unit = {
-    ivfMemo.filterInPlace { case ((s, _, _), (assigned, _)) =>
-      if (s eq spark) { assigned.unpersist(); false } else true
-    }
-    seededMemo.filterInPlace { case ((s, _), (assigned, _)) =>
-      if (s eq spark) { assigned.unpersist(); false } else true
-    }
-    lshMemo.filterInPlace { case ((s, _), df) =>
-      if (s eq spark) { df.unpersist(); false } else true
-    }
-  }
+  /** Releases the whole scratch lifetime of `spark`
+    * ([[graft.SessionCache.releaseScratch]]), not only IVF assignments and
+    * LSH signature bases. */
+  def releaseCache(spark: SparkSession): Unit =
+    graft.SessionCache.releaseScratch(spark)
 
   private[operators] def ivfAssign(spark: SparkSession, dir: String, k: Int = 0)
-      : (DataFrame, DataFrame) = {
-    // evict entries of stopped sessions (see NearDup.memoBase)
-    ivfMemo.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    ivfMemo.getOrElseUpdate((spark, dir, k), ivfAssignFrom(corpus(spark, dir), k))
-  }
+      : (DataFrame, DataFrame) =
+    ivfMemo(spark, (dir, k))(ivfAssignFrom(corpus(spark, dir), k))
 
   /** Direct (non-memoized) fit over an arbitrary corpus. The returned
     * assignment is PERSISTED and owned by the caller: it is not in
-    * ivfMemo, so [[releaseCache]] cannot free it — unpersist it (or let
+    * the session cache, so [[releaseCache]] cannot free it — unpersist it (or let
     * the session end) when done. Spec fixtures and probes accept the
     * session-lifetime pin; production paths go through [[ivfAssign]]. */
   private[graft] def ivfAssignFrom(c: DataFrame, k: Int = 0)
@@ -302,19 +292,20 @@ object Embeddings {
     // persist/materialize cycle around the ~12 k-means jobs (which
     // re-read their input per job). Byte-identical on a clean corpus.
     // Cache compacted to a size-proportionate partition count (same
-    // policy and rationale as NearDup.memoBase — every consumer re-read
-    // pays one task per cached partition); n is already counted above.
-    // CONDITIONAL, like memoBase: distinctEntities already leaves the
-    // relation at `conf` partitions, so when the corpus is big enough
-    // that parts == conf, a second repartition would be a full extra
-    // shuffle of the corpus-sized assignment that changes nothing.
-    val conf = spark.sessionState.conf.numShufflePartitions
-    val parts = math.max(1L, math.min(conf.toLong, n / 50000L + 1L)).toInt
+    // policy and rationale as Shuffles.compactCached — every consumer
+    // re-read pays one task per cached partition); n is already counted above,
+    // so the narrow layout is chosen BEFORE the persist, not by
+    // Shuffles.compactCached. CONDITIONAL, like memoBase:
+    // distinctEntities already leaves the relation at `conf` partitions,
+    // so when the corpus is big enough that parts == conf, a second
+    // repartition would be a full extra shuffle of the corpus-sized
+    // assignment that changes nothing.
+    val parts = Shuffles.sizedPartitions(c, n)
     val distinctAssigned = Shuffles.distinctEntities(
       model.transform(feat)
         .select(col("vec_id"), col("emb"), col("label"), col("bucket")))
     val assigned =
-      (if (parts < conf) distinctAssigned.repartition(parts)
+      (if (parts < Shuffles.sessionWidth(c)) distinctAssigned.repartition(parts)
        else distinctAssigned).persist()
     val cents = model.clusterCenters.toSeq.zipWithIndex.map { case (v, i) => (i, v.toArray) }
     val centDf = spark.createDataFrame(cents).toDF("bucket", "cemb")
@@ -509,13 +500,11 @@ object Embeddings {
 
   /** Session memo of the seeded assignment (decontaminate_semantic and
     * ann_ivf_seeded share it), mirroring [[ivfAssign]]. */
-  private val seededMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), (DataFrame, DataFrame)]
+  private val seededMemo = graft.SessionCache.scratch[String,
+    (DataFrame, DataFrame)] { case (assigned, _) => assigned.unpersist() }
 
-  private[graft] def seededAssignFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    seededMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    seededMemo.getOrElseUpdate((spark, dir), seededAssign(corpus(spark, dir)))
-  }
+  private[graft] def seededAssignFor(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    seededMemo(spark, dir)(seededAssign(corpus(spark, dir)))
 
   /** IVF ANN over the seeded quantizer — same probe/cap/rank machinery
     * as [[annIvf]], oracle-hash-verified end to end (the one ANN path
@@ -527,8 +516,7 @@ object Embeddings {
     ivfSearchOn(assigned, cents, q, nprobe)
   }
 
-  private val erasedIvfMemo = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String), String]
+  private val erasedIvfMemo = graft.SessionCache.store[String, String]
 
   /** Store for `ann_ivf_erased`: the SEEDED assignment persisted as a
     * durable index (deterministic centroids — the one IVF geometry the
@@ -537,16 +525,9 @@ object Embeddings {
     * request replayed verbatim to exercise the content-keyed no-op.
     * Serving reads the tombstone-phase path; [[compactIvfIndex]]'s
     * physical identity is spec-pinned. */
-  private def erasedIvfPath(spark: SparkSession, dir: String): String = {
-    erasedIvfMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    erasedIvfMemo.getOrElseUpdate((spark, dir), {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(64)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val nonce = java.lang.Long.toHexString(
-        new java.security.SecureRandom().nextLong())
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivf_ers_${safe}_${key}_$nonce").getAbsolutePath
+  private def erasedIvfPath(spark: SparkSession, dir: String): String =
+    erasedIvfMemo(spark, dir) {
+      val path = graft.SessionCache.storePath("graft_ivf_ers", dir)
       val (assigned, cents) = seededAssignFor(spark, dir)
       writeIvfIndexFrom(assigned, cents, path)
       val subjects = corpus(spark, dir)
@@ -554,8 +535,7 @@ object Embeddings {
       eraseIvfVectors(spark, path, subjects)
       eraseIvfVectors(spark, path, subjects) // replayed request: no-op
       path
-    })
-  }
+    }
 
   /** The registered IVF-erasure query: the seeded query batch served
     * from the erased durable store — erased vectors neither surface nor
@@ -1118,14 +1098,13 @@ object Embeddings {
     // the signature projection feeds three plan references (queries,
     // candidates, hot-bucket counts) — persist it once per session, like
     // the other shared bases
-    lshMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    val sigs = lshMemo.getOrElseUpdate((spark, s"$dir:$nBits:$bands"),
+    val sigs = lshMemo(spark, (dir, nBits, bands))(
       lshSigs(corpus(spark, dir), nBits, bands).persist())
     lshSearch(sigs, topK, nBits / bands, hammingProbes)
   }
 
   private val lshMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
+    graft.SessionCache.scratch[(String, Int, Int), DataFrame](_.unpersist())
 
   private[graft] def annLshFrom(corpusDf: DataFrame, nBits: Int = 32,
       bands: Int = 4, topK: Int = 10, hammingProbes: Int = 0): DataFrame =

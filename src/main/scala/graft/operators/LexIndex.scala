@@ -460,37 +460,24 @@ object LexIndex {
   /** Session memo of a built index per corpus dir: the registered
     * `_served` queries build the store ONCE per (session, corpus) under
     * the JVM temp dir and every later call serves from it — the
-    * train-once / serve-many shape the store exists for. */
-  private val servedMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), String]
+    * train-once / serve-many shape the store exists for. Keyed on
+    * (dir, erased): the plain served store and the erased one. */
+  private val servedMemo = graft.SessionCache.store[(String, Boolean), String]
 
-  /** Distinct raw dirs must never share a store path: the readable
-    * prefix is convenience only, the md5 of the RAW dir string is the
-    * collision-proof key (e.g. '/data/a b' vs '/data/a_b' sanitize
-    * alike), and the per-JVM nonce keeps the path unpredictable — a
-    * fixed /tmp name could be pre-created or clobbered by another user
-    * on a shared host. */
-  private lazy val jvmNonce: String = java.lang.Long.toHexString(
-    new java.security.SecureRandom().nextLong())
+  /** Distinct raw dirs never share a store path, and the per-JVM nonce
+    * keeps the path deterministic in-process but unpredictable
+    * ([[graft.SessionCache.storePath]]). */
+  private[graft] def storePathFor(dir: String): String =
+    graft.SessionCache.storePath("graft_lex", dir, graft.SessionCache.jvmNonce)
 
-  private[graft] def storePathFor(dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(64)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_lex_${safe}_${key}_$jvmNonce").getAbsolutePath
-  }
-
-  def servedIndexPath(spark: SparkSession, dir: String): String = {
-    servedMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    servedMemo.getOrElseUpdate((spark, dir), {
+  def servedIndexPath(spark: SparkSession, dir: String): String =
+    servedMemo(spark, (dir, false)) {
       val path = storePathFor(dir)
       // a new session always rebuilds (publishStore swaps atomically), so
       // a stale store from an earlier JVM can never serve this session
       writeLexIndex(spark, dir, path)
       path
-    })
-  }
+    }
 
   /** Store for `search_bm25_erased`: full build, then every doc of the
     * deterministic subject set (doc_id ≡ 3 mod 7 — it holds two of the
@@ -499,9 +486,8 @@ object LexIndex {
     * verbatim to exercise the content-keyed no-op. Serving reads the
     * tombstone-phase paths (anti-joined postings + negative stats); the
     * physical [[compactLexIndex]] identity is spec-pinned. */
-  def erasedIndexPath(spark: SparkSession, dir: String): String = {
-    servedMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    servedMemo.getOrElseUpdate((spark, s"ers:$dir"), {
+  def erasedIndexPath(spark: SparkSession, dir: String): String =
+    servedMemo(spark, (dir, true)) {
       val path = storePathFor(s"ers:$dir")
       writeLexIndex(spark, dir, path)
       val subjects = Tables.documents(spark, dir)
@@ -510,6 +496,5 @@ object LexIndex {
       eraseLexDocs(spark, path, subjects)
       eraseLexDocs(spark, path, subjects) // replayed request: no-op
       path
-    })
-  }
+    }
 }

@@ -356,20 +356,12 @@ object Multimodal {
     // roster re-ran the whole payload-carrying scan+encode+distinct a
     // second time. Everything after this line operates on the ~300-byte
     // signature proxy, never the payload. The persisted base is also
-    // compacted to a size-proportionate partition count (the NearDup
-    // memoBase policy): the kernel pass runs at full fan-out during
-    // materialization, but the ~6 downstream re-reads then pay
-    // size-many tasks instead of conf-many.
-    val wide = perceptualBase(media).persist()
-    val nEnt = wide.count()
-    val conf = media.sparkSession.sessionState.conf.numShufflePartitions
-    val parts = math.max(1L, math.min(conf.toLong, nEnt / 50000L + 1L)).toInt
-    val base = if (parts < conf) {
-      val c = wide.repartition(parts).persist()
-      c.count()
-      wide.unpersist()
-      c
-    } else wide
+    // compacted to a size-proportionate partition count
+    // (Shuffles.compactCached): the kernel
+    // pass runs at full fan-out during materialization, but the ~6
+    // downstream re-reads then pay size-many tasks instead of conf-many.
+    val base = Shuffles.compactCached(perceptualBase(media).persist(),
+      Shuffles.sessionWidth)
     try {
       val sigs = base.where(col("n") > 0)
       val allKeys = sigs.select(col("id"), explode(col("keys")).as("key"))

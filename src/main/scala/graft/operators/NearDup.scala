@@ -80,51 +80,31 @@ object NearDup {
     * share one base (dedup_minhash + dedup_clusters read the same word-3
     * signatures); memoizing the persisted DataFrame means one scan+persist
     * per (session, corpus, signature kind) instead of one per query — and
-    * no CacheManager "already cached" re-persist noise. Lifecycle: held
-    * until [[releaseCache]] (or session end); entries are kilobytes/doc. */
+    * no CacheManager "already cached" re-persist noise. A
+    * [[graft.SessionCache]] scratch entry: held until [[releaseCache]]
+    * (or session end); entries are kilobytes/doc. */
   private val baseMemo =
-    new scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]
+    graft.SessionCache.scratch[Product, DataFrame](_.unpersist())
 
-  /** Docs per cached-base partition (sig+keys ≈ 1.3 KB/doc, so this is
-    * ~64 MB partitions). The base is re-read ~6× per summary (key
-    * explode, count filter, two sig joins, left-join spine) and every
-    * re-read launches one task per cached partition — so the CACHE
-    * layout must track data volume, not the session's shuffle fan-out:
-    * a fixed 32-way layout makes each downstream stage pay full-fan
-    * task-launch overhead even for a few thousand docs, while one giant
-    * partition would serialize the signature kernels at build time. */
-  private val DocsPerBasePartition = 50000L
+  /** Build wide, cache narrow ([[Shuffles.compactCached]]): the kernel
+    * projection runs at full session parallelism (distinctEntities), then
+    * the persisted copy is compacted to ~50k docs per partition (sig+keys
+    * ≈ 1.3 KB/doc, so ~64 MB partitions). The base is re-read ~6× per
+    * summary (key explode, count filter, two sig joins, left-join spine)
+    * and every re-read launches one task per cached partition — so the
+    * CACHE layout must track data volume, not the session's shuffle
+    * fan-out, while one giant partition would serialize the signature
+    * kernels at build time. The compaction shuffle moves signatures, not
+    * text — ~1% of corpus bytes; at cluster scale it is a no-op and no
+    * second cache is built. */
+  private def memoBase(spark: SparkSession, key: Product)(build: => DataFrame): DataFrame =
+    baseMemo(spark, key)(
+      Shuffles.compactCached(build.persist(), _.rdd.getNumPartitions))
 
-  private def memoBase(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    // evict entries of stopped sessions — otherwise a long-lived JVM that
-    // cycles sessions (test suites, notebooks) pins them forever
-    baseMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    baseMemo.getOrElseUpdate((spark, key), {
-      // Build wide, cache narrow: the kernel projection runs at full
-      // session parallelism (distinctEntities), then the persisted copy
-      // is compacted to a size-proportionate partition count. The count
-      // doubles as the cache's materialization action, and the compaction
-      // shuffle moves signatures, not text — ~1% of corpus bytes. At
-      // cluster scale (docs ≫ DocsPerBasePartition × parallelism) the
-      // compaction is a no-op and no second cache is built.
-      val wide = build.persist()
-      val n = wide.count()
-      val conf = spark.sessionState.conf.numShufflePartitions
-      val parts = math.max(1L, math.min(conf.toLong, n / DocsPerBasePartition + 1L)).toInt
-      if (parts < wide.rdd.getNumPartitions) {
-        val compact = wide.repartition(parts).persist()
-        compact.count()
-        wide.unpersist()
-        compact
-      } else wide
-    })
-  }
-
-  /** Unpersist and drop every signature base cached for `spark`. */
+  /** Releases the whole scratch lifetime of `spark`
+    * ([[graft.SessionCache.releaseScratch]]), not only signature bases. */
   def releaseCache(spark: SparkSession): Unit =
-    baseMemo.filterInPlace { case ((s, _), df) =>
-      if (s eq spark) { df.unpersist(); false } else true
-    }
+    graft.SessionCache.releaseScratch(spark)
 
   /** LSH candidate pairs with exact similarity — shared by the per-doc
     * summaries and the cluster operator. `base` must be persisted by the
@@ -196,7 +176,7 @@ object NearDup {
   /** Shared word-3-shingle signature base (dedup_minhash, dedup_clusters,
     * train_test_split all read it) — memoized + persisted per session. */
   private[graft] def word3Base(spark: SparkSession, dir: String): DataFrame =
-    memoBase(spark, s"word3:$dir") {
+    memoBase(spark, ("word3", dir)) {
       val sh = wordShingles(col("text"), 3)
       // at-least-once delivery collapses to the distinct document entity
       // before signatures — a redelivered copy must not inflate band-key
@@ -215,7 +195,7 @@ object NearDup {
     * similarity is 1 - hamming/64 so the threshold reads like the others
     * (0.95 ≈ ≤3 differing bits). */
   def dedupSimhash(spark: SparkSession, dir: String, thr: Double = 0.95): DataFrame = {
-    val base = memoBase(spark, s"simhash:$dir") {
+    val base = memoBase(spark, ("simhash", dir)) {
       // same distinct-entity contract (and parallelism rationale) as the
       // word-3 base
       Shuffles.distinctEntities(
@@ -242,7 +222,7 @@ object NearDup {
     * and every consumer is a join/projection over the 2-long-per-doc
     * labels relation. Released via [[releaseCache]]. */
   def clusterLabels(spark: SparkSession, dir: String, thr: Double = 0.8): DataFrame =
-    memoBase(spark, s"cc:$dir:$thr") {
+    memoBase(spark, ("cc", dir, thr)) {
       val base = word3Base(spark, dir)
       val dupEdges = scoredPairs(base, minhashJaccard).where(col("sim") >= thr)
         .select(col("id_a"), col("id_b"))
@@ -375,7 +355,7 @@ object NearDup {
     // the corpus path memoizes its fingerprint base like every other
     // signature family member — the base is re-read ~5× downstream
     containmentSummary(
-      memoBase(spark, s"winnow$k-$w:$dir") {
+      memoBase(spark, ("winnow", k, w, dir)) {
         winnowBase(Tables.documents(spark, dir), k, w)
       }, thr)
 
@@ -678,24 +658,16 @@ object NearDup {
     * batch touches are read at all ([[prunedKeyIndex]]). The production
     * entry point of the incremental contract ([[dedupIncremental]] is its
     * self-contained single-corpus twin for the driver harness). */
-  private val erasedSigMemo = scala.collection.concurrent.TrieMap.empty[
-    (SparkSession, String), String]
+  private val erasedSigMemo = graft.SessionCache.store[String, String]
 
   /** Store for `dedup_incremental_erased`: the CORPUS side of
     * [[dedupIncremental]]'s deterministic split (md5(id) mod 10 ≠ 0)
     * persisted as a durable signature index, then every doc of the
     * subject set (doc_id ≡ 8 mod 9) erased via [[eraseSignatureDocs]],
     * the request replayed verbatim (content-keyed no-op). */
-  private def erasedSigPath(spark: SparkSession, dir: String): String = {
-    erasedSigMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    erasedSigMemo.getOrElseUpdate((spark, dir), {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(64)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val nonce = java.lang.Long.toHexString(
-        new java.security.SecureRandom().nextLong())
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_sig_ers_${safe}_${key}_$nonce").getAbsolutePath
+  private def erasedSigPath(spark: SparkSession, dir: String): String =
+    erasedSigMemo(spark, dir) {
+      val path = graft.SessionCache.storePath("graft_sig_ers", dir)
       val base = word3Base(spark, dir)
       val isBatch = org.apache.spark.sql.graft.Bridge.column(
         graft.expressions.Md5LowerMod(org.apache.spark.sql.graft.Bridge
@@ -706,8 +678,7 @@ object NearDup {
       eraseSignatureDocs(spark, path, subjects)
       eraseSignatureDocs(spark, path, subjects) // replayed request: no-op
       path
-    })
-  }
+    }
 
   /** The registered signature-store erasure query: [[dedupIncremental]]'s
     * batch served against the ERASED durable index — tombstoned corpus
@@ -742,28 +713,19 @@ object NearDup {
     // twin and the SQL oracle both report every batch entity, and a
     // text filter here silently shrank the served universe on corpora
     // with NULL documents (the combined/null probe axes caught it).
-    var batch = newDocs
+    val wide = newDocs
       .select(col("doc_id").as("id"),
         minhashSig(sh, 128).as("sig"),
         minhashBandKeys(sh, 32, 4).as("keys"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    var batch = wide
     try {
-      val nBatch = batch.count() // materialize while the plan is this narrow
-      // cache compacted to a size-proportionate partition count (the
-      // memoBase policy, r20): the signature kernels ran at full fan-out
-      // during the count above; the touched-bucket collect and the
-      // scoring plan then re-read the cache at size-many tasks instead
-      // of conf-many
-      val conf = spark.sessionState.conf.numShufflePartitions
-      val parts = math.max(1L,
-        math.min(conf.toLong, nBatch / 50000L + 1L)).toInt
-      if (parts < conf) {
-        val compact = batch.repartition(parts)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        compact.count()
-        batch.unpersist(false)
-        batch = compact
-      }
+      // materialize while the plan is this narrow, then cache compacted
+      // to a size-proportionate partition count (the memoBase policy,
+      // r20): the signature kernels run at full fan-out during the
+      // count; the touched-bucket collect and the scoring plan then
+      // re-read the cache at size-many tasks instead of conf-many
+      batch = Shuffles.compactCached(wide, Shuffles.sessionWidth)
       // READER-passive healing (the shared IO.readableStore contract):
       // complete a crashed swap only when no live dir exists, never
       // delete — a tmp next to a live index may be a concurrent
@@ -858,7 +820,7 @@ object NearDup {
     * would pass most of the corpus as candidates (O(n²) verify); 8-row
     * bands keep the candidate set to genuinely close pairs (J ≳ 0.75). */
   def ngramJaccard(spark: SparkSession, dir: String, thr: Double = 0.7): DataFrame = {
-    val base = memoBase(spark, s"char5:$dir") {
+    val base = memoBase(spark, ("char5", dir)) {
       val sh = charShingles(col("text"), 5)
       // same distinct-entity contract (and parallelism rationale) as the
       // word-3 base — and the heaviest kernel of the family (~60× more

@@ -1270,29 +1270,23 @@ object Relational {
     graft.sources.StoreProtocol.invalidateStore(p.toString)
   }
 
-  private val zorderMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), String]
+  private val zorderMemo = graft.SessionCache.store[(String, String), String]
 
-  /** Session-memoized served table (the lex-store pattern: md5 of the
-    * raw dir + a per-JVM nonce — collision-proof, never a predictable
-    * shared /tmp name; a new session always rebuilds). */
+  /** Session-memoized served table (the lex-store pattern: a
+    * [[graft.SessionCache.storePath]] with the per-JVM nonce; a new
+    * session always rebuilds). */
   private[graft] def servedZorderPath(spark: SparkSession,
       dir: String): String =
     zorderStorePath(spark, dir, "base")(writeZorderTable(spark, dir, _))
 
   private def zorderStorePath(spark: SparkSession, dir: String,
-      variant: String)(build: String => Unit): String = {
-    zorderMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    zorderMemo.getOrElseUpdate((spark, s"$variant:$dir"), {
-      val safe = dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(64)
-      val key = java.security.MessageDigest.getInstance("MD5")
-        .digest(dir.getBytes("UTF-8")).take(8).map("%02x".format(_)).mkString
-      val path = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_zorder_${variant}_${safe}_${key}_$zorderNonce").getAbsolutePath
+      variant: String)(build: String => Unit): String =
+    zorderMemo(spark, (variant, dir)) {
+      val path = graft.SessionCache.storePath(s"graft_zorder_$variant", dir,
+        graft.SessionCache.jvmNonce)
       build(path)
       path
-    })
-  }
+    }
 
   /** The base/increment split the lifecycle stores exercise: increments
     * are ~2/5 of the corpus by a deterministic event_id residue (NULL
@@ -1404,9 +1398,6 @@ object Relational {
     eventsAsofServedFrom(spark, path, 3L, "2024-01-20 00:00:00")
       .unionAll(eventsAsofServedFrom(spark, path, 5L, "2024-02-10 12:00:00"))
   }
-
-  private lazy val zorderNonce: String = java.lang.Long.toHexString(
-    new java.security.SecureRandom().nextLong())
 
   /** Compaction planner — [[layoutZorder]]'s maintenance sibling: given
     * per-partition (day) row counts, assign consecutive partitions to
@@ -1772,19 +1763,20 @@ object Relational {
     * bucket — the exact-rank floor, with `valuePercentilesApprox` as the
     * sanctioned constant-memory path.
     */
-  /** Session-scoped memo of the frozen quantile boundaries (the
-    * NearDup.memoBase pattern, driver-side values instead of a persisted
-    * DataFrame): computing the bounds is a full-scan approx_percentile
-    * action that runs at PLAN-CONSTRUCTION time (see
-    * [[valuePercentilesFrom]]), so every re-construction — each bench
-    * pass, each EXPLAIN — would repay it. Keyed by (session, input dir,
-    * buckets); entries are |types| × (buckets−1) doubles. */
-  private val boundsMemo = new scala.collection.concurrent.TrieMap[
-    (SparkSession, String), Map[String, Seq[Double]]]
+  /** Session-scoped memo of the frozen quantile boundaries (a
+    * [[graft.SessionCache]] scratch entry holding driver-side values):
+    * computing the bounds is a full-scan approx_percentile action that
+    * runs at PLAN-CONSTRUCTION time (see [[valuePercentilesFrom]]), so
+    * every re-construction — each bench pass, each EXPLAIN — would repay
+    * it. Keyed by (session, input dir, buckets); entries are
+    * |types| × (buckets−1) doubles. */
+  private val boundsMemo =
+    graft.SessionCache.scratch[(String, Int), Map[String, Seq[Double]]](_ => ())
 
-  /** Drop every frozen-bounds entry cached for `spark`. */
+  /** Releases the whole scratch lifetime of `spark`
+    * ([[graft.SessionCache.releaseScratch]]), not only frozen bounds. */
   def releaseCache(spark: SparkSession): Unit =
-    boundsMemo.filterInPlace { case ((s, _), _) => !(s eq spark) }
+    graft.SessionCache.releaseScratch(spark)
 
   /** NOTE: constructing this DataFrame runs a distributed job (the frozen
     * boundary sampling — see step 1 in [[valuePercentilesFrom]]'s doc);
@@ -1794,11 +1786,11 @@ object Relational {
   def valuePercentiles(spark: SparkSession, dir: String): DataFrame =
     valuePercentilesFrom(
       Tables.events(spark, dir).select(col("event_type"), col("value")),
-      boundsKey = Some((spark, s"$dir:64")))
+      boundsDir = Some((spark, dir)))
 
   private[graft] def valuePercentilesFrom(ev: DataFrame,
       buckets: Int = 64,
-      boundsKey: Option[(SparkSession, String)] = None): DataFrame = {
+      boundsDir: Option[(SparkSession, String)] = None): DataFrame = {
     import org.apache.spark.sql.graft.Bridge
     // count(*) (incl. NULL values — the oracle's n_events/avg divisor) and
     // count(value) (non-null — the quantile_cont rank base) both in one pass
@@ -1834,10 +1826,8 @@ object Relational {
     // EMPTY input degrade every stratum to one bucket (the single-reducer
     // regime) — releaseCache(spark) after bulk-loading an input that was
     // empty at first construction.
-    val boundsMap: Map[String, Seq[Double]] = boundsKey match {
-      case Some(k) =>
-        boundsMemo.filterInPlace { case ((ms, _), _) => !ms.sparkContext.isStopped }
-        boundsMemo.getOrElseUpdate(k, computeBounds())
+    val boundsMap: Map[String, Seq[Double]] = boundsDir match {
+      case Some((spark, dir)) => boundsMemo(spark, (dir, buckets))(computeBounds())
       case None => computeBounds()
     }
     // try_element_at + empty-array fallback, not element_at: a stratum

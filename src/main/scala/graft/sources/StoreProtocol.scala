@@ -35,8 +35,7 @@ object StoreProtocol {
   // the stores' single-flight-writer contract already makes concurrent
   // external mutation undefined; a new session starts cold.
 
-  private val metaMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), Any]
+  private val metaMemo = graft.SessionCache.store[(String, String), Any]
 
   /** Cache-miss counter — test-visible so a spec can pin "repeat serves
     * probe the filesystem zero times". */
@@ -52,22 +51,18 @@ object StoreProtocol {
     * store's SUBDIRECTORIES (data/, tombstones/, cuts/) fall with the
     * store root. */
   private[graft] def cached[T](spark: SparkSession, path: String,
-      slot: String)(compute: => T): T = {
-    metaMemo.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    metaMemo.getOrElseUpdate((spark, s"${norm(path)}#$slot"), {
+      slot: String)(compute: => T): T =
+    metaMemo(spark, (norm(path), slot)) {
       probeMisses.incrementAndGet()
       compute
-    }).asInstanceOf[T]
-  }
+    }.asInstanceOf[T]
 
   /** Drop every cached probe of the store at `path` (and anything below
     * it) for ALL sessions — called by every writer entry. Prefix-safe:
     * `/a/b` never invalidates `/a/bc`. */
   def invalidateStore(path: String): Unit = {
     val n = norm(path)
-    metaMemo.filterInPlace { case ((_, k), _) =>
-      !(k.startsWith(n + "#") || k.startsWith(n + "/"))
-    }
+    metaMemo.invalidate { case (p, _) => p == n || p.startsWith(n + "/") }
   }
 
   /** Whether `dir` holds at least one `.parquet` data file — the gate

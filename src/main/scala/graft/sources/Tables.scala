@@ -23,15 +23,11 @@ object Tables {
     * from the parquet files (nothing materialized, nothing persisted),
     * exactly like a production app that defines its table DataFrames
     * once at startup. Testdata dirs are immutable inputs, so there is no
-    * invalidation to miss; stopped sessions are swept on entry. */
-  private val memo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
+    * invalidation to miss: a [[graft.SessionCache]] store. */
+  private val memo = graft.SessionCache.store[(String, String), DataFrame]
 
-  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
-    memo.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    memo.getOrElseUpdate((spark, dir, name),
-      spark.read.parquet(s"$dir/$name.parquet"))
-  }
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame =
+    memo(spark, (dir, name))(spark.read.parquet(s"$dir/$name.parquet"))
 
   def region(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = read(spark, dir, "nation")

@@ -141,12 +141,7 @@ class PipelineSpec extends AnyFunSuite {
     // tie-breaks, and the two 1-row global aggregates ragBatch joins —
     // so two END-TO-END drives must produce byte-identical prompts
     val sf01 = "/root/testdata/sf0.01"
-    def releaseAll(): Unit = {
-      graft.operators.Embeddings.releaseCache(spark)
-      graft.operators.NearDup.releaseCache(spark)
-      graft.operators.Corpus.releaseCache(spark)
-      graft.operators.Relational.releaseCache(spark)
-    }
+    def releaseAll(): Unit = graft.SessionCache.releaseScratch(spark)
     // drop every session memo between runs so run 2 re-executes each
     // stage from scratch — a fit/signature memo surviving across runs
     // would make the byte-equality vacuous for the memoized stage
