@@ -167,10 +167,10 @@ object ScaleProbe {
         NearDup.minhashBandKeys(sh, 32, 4).as("keys"))
     }
     // capped per-day report assembly: at N× the lines per day the
-    // WindowGroupLimit rank saturates at maxLines, so the string branch's
-    // shuffle/aggregation stays CONSTANT and growth tracks the count
-    // branch's linear scan — the bound that replaced the unbounded
-    // one-row-per-day string aggregation
+    // bounded top-N heap saturates at maxLines, so the shuffled line
+    // state stays CONSTANT per (task, day) and growth tracks the linear
+    // scan — the bound that replaced the unbounded one-row-per-day
+    // string aggregation
     def report(df: DataFrame): DataFrame =
       graft.operators.LogOps.incidentReportFrom(df)
 

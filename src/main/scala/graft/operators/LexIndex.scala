@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import org.apache.spark.sql.types._
+import graft.sources.{StoreProtocol, Tables}
 import graft.functions.TextFns
 
 /** Durable inverted (lexical) index — the persisted serving store for the
@@ -63,9 +65,21 @@ object LexIndex {
         org.apache.spark.unsafe.types.UTF8String.fromString(term)),
       TermBuckets.toLong).toInt
 
+  /** The one posting schema: [[postingsOf]] lays exactly these columns
+    * and every read of the store passes it, so no read infers a schema
+    * (an empty corpus's postings dir has no data file to infer from). */
+  private[graft] val PostingSchema: StructType = StructType(Seq(
+    StructField("doc_id", LongType), StructField("term", StringType),
+    StructField("tf", LongType), StructField("dl", LongType),
+    StructField("tb", IntegerType)))
+
+  private val StatsSchema: StructType = StructType(Seq(
+    StructField("inc_id", StringType), StructField("total_len", LongType),
+    StructField("n_docs", LongType)))
+
   /** The (term, doc_id, tf, dl) posting relation of a corpus slice —
     * shared by the full build and the append path so both lay
-    * byte-identical rows. */
+    * byte-identical rows, typed as [[PostingSchema]]. */
   private[graft] def postingsOf(documents: DataFrame): DataFrame = {
     val toks = TextFns.wsTokens(TextFns.foldCase(col("text")))
     documents.where(col("text").isNotNull)
@@ -75,6 +89,7 @@ object LexIndex {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).cast("long").as("tf"), max(col("dl")).as("dl"))
       .withColumn("tb", bucketCol(col("term")))
+      .select(PostingSchema.fields.map(f => col(f.name).cast(f.dataType)): _*)
   }
 
   /** One stats row per WRITE (full build or increment): the corpus
@@ -197,6 +212,9 @@ object LexIndex {
       new org.apache.hadoop.fs.Path(p, "postings"))
     moveFiles(new org.apache.hadoop.fs.Path(tmp, "stats"),
       new org.apache.hadoop.fs.Path(p, "stats"))
+    // commit point: a serve that cached the store while the files moved
+    // holds the pre-commit listing — drop it now the last file landed
+    StoreProtocol.invalidateStore(p.toString)
     fs.delete(tmp, true)
   }
 
@@ -215,8 +233,14 @@ object LexIndex {
   /** Serve a BM25 query from a persisted [[writeLexIndex]] store — no
     * corpus scan, no tokenization: the postings read partition-prunes to
     * the ≤ |terms| buckets the query's terms hash to, df comes from the
-    * pruned postings, and the ranking is [[Corpus.bm25Rank]] verbatim.
-    * Result ≡ [[Corpus.searchBm25]] on the indexed corpus. */
+    * pruned postings, and the scoring is [[Corpus.bm25RankJoined]]
+    * verbatim. Result ≡ [[Corpus.searchBm25]] on the indexed corpus.
+    *
+    * Per-request cost: the postings handle and the corpus constants come
+    * from [[StoreProtocol.cached]] (filled once per store generation), so
+    * building the DataFrame runs no Spark job; executing it runs one
+    * term-keyed exchange (collapse + df), one doc-keyed exchange (the
+    * per-doc score) and the top-k result stage. */
   def searchBm25Against(spark: SparkSession, path: String, query: String,
       topK: Int = 10, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val fs = graft.sources.IO.readableStore(spark, path, "__lex_tmp")
@@ -226,54 +250,71 @@ object LexIndex {
     val postings = readPostings(spark, path)
     // an all-whitespace query has no terms: empty result, index-typed
     // schema (the searchBm25 empty-branch contract)
-    if (terms.isEmpty)
-      return postings.select(col("doc_id"),
-        lit(null).cast("long").as("n_terms"),
-        lit(null).cast("double").as("score"),
-        lit(null).cast("long").as("rk")).limit(0)
+    if (terms.isEmpty) return noHits(postings)
     val tbs = terms.map(bucketOf).distinct.sorted
     val tf = postings
       .where(col("tb").isin(tbs.map(Int.box): _*)) // partition pruning
       .where(col("term").isin(terms: _*))
       .select(col("doc_id"), col("term"), col("tf"), col("dl"))
+      // one exchange on term serves both the collapse below (term is a
+      // subset of its keys) and the per-term df window
+      .repartition(col("term"))
       // a crash-REPLAYED append lays byte-identical posting rows — the
       // engine-wide at-least-once contract collapses them at the
       // consumer (the distinct runs over the PRUNED read only)
       .distinct()
-    val dfRel = broadcast(
-      tf.groupBy(col("term")).agg(count(lit(1)).cast("long").as("df")))
-    Corpus.bm25Rank(tf, dfRel, readStats(spark, path), terms, topK, k1, b)
+    rankServed(tf, readStats(spark, path), terms, topK, k1, b)
   }
 
-  /** The corpus constants of a store: exact-integer sums over the
-    * per-write stats rows (full build + any appends), duplicate
-    * increments dropped by their content key. ONE definition for both
-    * serving paths — a drift here would silently mis-normalize scores. */
-  private def readStats(spark: SparkSession, path: String): DataFrame =
-    broadcast(spark.read.parquet(s"$path/stats")
-      .dropDuplicates("inc_id")
-      .agg(coalesce(sum(col("total_len")), lit(0L)).cast("long").as("total_len"),
-        coalesce(sum(col("n_docs")), lit(0L)).cast("long").as("n_docs")))
+  private def noHits(postings: DataFrame): DataFrame =
+    postings.select(col("doc_id"),
+      lit(null).cast("long").as("n_terms"),
+      lit(null).cast("double").as("score"),
+      lit(null).cast("long").as("rk")).limit(0)
+
+  /** BM25 over a pruned, collapsed (doc_id, term, tf, dl) relation: df
+    * is the count of each term's own rows (the posting-row count IS the
+    * document frequency), taken in the scoring pass instead of a
+    * broadcast join; the corpus constants (total_len, n_docs) enter as
+    * literals. Same columns and op order as the corpus-scan path, so the
+    * scores stay bit-identical. An empty corpus ranks nothing (its 0/0
+    * avgdl literal would fold, and abort under ANSI, at planning). */
+  private def rankServed(tf: DataFrame, stats: (Long, Long),
+      terms: Seq[String], topK: Int, k1: Double, b: Double): DataFrame =
+    if (stats._2 <= 0L) noHits(tf)
+    else Corpus.bm25RankJoined(
+      tf.select(col("doc_id"), col("term"), col("tf"), col("dl"),
+        count(lit(1)).over(Window.partitionBy(col("term"))).cast("long")
+          .as("df"),
+        lit(stats._1).as("total_len"), lit(stats._2).as("n_docs")),
+      terms, topK, k1, b)
+
+  /** The corpus constants (total_len, n_docs) of a store as driver
+    * values: exact-integer sums over the per-write stats rows (full build
+    * + any appends), duplicate increments dropped by their content key.
+    * Read once per store generation — every writer drops the cached
+    * entry at its commit point. ONE definition for both serving paths —
+    * a drift here would silently mis-normalize scores. */
+  private def readStats(spark: SparkSession, path: String): (Long, Long) =
+    StoreProtocol.cached(spark, s"$path/stats", "lexStats") {
+      val r = spark.read.schema(StatsSchema).parquet(s"$path/stats")
+        .dropDuplicates("inc_id")
+        .agg(coalesce(sum(col("total_len")), lit(0L)).cast("long"),
+          coalesce(sum(col("n_docs")), lit(0L)).cast("long"))
+        .head()
+      (r.getLong(0), r.getLong(1))
+    }
 
   /** The postings relation of a store, shared by BOTH serving paths —
     * erased subjects drop here via a broadcast anti-join against the
     * tombstone relation ([[eraseLexDocs]]), so every consumer (single
     * query, batch, compaction) sees the post-erasure corpus through one
-    * definition. An EMPTY corpus writes a postings dir with no data
-    * files (partitionBy of zero rows) — schema inference fails there,
-    * and the correct serving result is the empty relation with the
-    * store's canonical posting schema. */
+    * definition. The relation handle (never a result) is cached per
+    * store like the tombstones: its file listing is resolved once per
+    * store generation, and every writer drops it at its commit point. */
   private def readPostings(spark: SparkSession, path: String): DataFrame = {
-    val raw = try spark.read.parquet(s"$path/postings") catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-        import org.apache.spark.sql.types._
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(
-            StructField("doc_id", LongType), StructField("term", StringType),
-            StructField("tf", LongType), StructField("dl", LongType),
-            StructField("tb", IntegerType))))
+    val raw = StoreProtocol.cached(spark, s"$path/postings", "lexPostings") {
+      spark.read.schema(PostingSchema).parquet(s"$path/postings")
     }
     lexTombstones(spark, path)
       .map(t => raw.join(broadcast(t), Seq("doc_id"), "left_anti"))
@@ -288,7 +329,7 @@ object LexIndex {
     * tombstones" on a remote store and serves erased subjects). */
   private def lexTombstones(spark: SparkSession,
       path: String): Option[DataFrame] =
-    graft.sources.StoreProtocol.tombstones(spark, path, "doc_id")
+    StoreProtocol.tombstones(spark, path, "doc_id")
 
   /** GDPR-article-17 erasure for the lexical index — the retrieval-store
     * leg of the governance family (the z-table's [[graft.operators
@@ -394,6 +435,8 @@ object LexIndex {
     recoverLexErase(fs, p)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$path/stats")),
       s"cannot compact a missing lexical index at $path")
+    // a writer reads the store as it is on disk, never a serve's handle
+    StoreProtocol.invalidateStore(path)
     // force the consolidated inputs BEFORE the swap: their plans read the
     // generation the swap replaces
     val postings = readPostings(spark, path).distinct().localCheckpoint()
@@ -448,10 +491,8 @@ object LexIndex {
       .localCheckpoint(false)
     val stats = readStats(spark, path)
     perQ.map { case (qid, terms) =>
-      val tf = base.where(col("term").isin(terms: _*))
-      val dfRel = broadcast(
-        tf.groupBy(col("term")).agg(count(lit(1)).cast("long").as("df")))
-      Corpus.bm25Rank(tf, dfRel, stats, terms, topK, k1, b)
+      rankServed(base.where(col("term").isin(terms: _*)), stats, terms,
+          topK, k1, b)
         .select(lit(qid).as("qid"), col("doc_id"), col("n_terms"),
           col("score"), col("rk"))
     }.reduce(_ unionByName _)

@@ -474,8 +474,9 @@ object LogOps {
 
   /** Per-day incident report: the `- ts | container | level | message` log
     * lines of build_prompt (llm_processor.py:30-42), aggregated into one
-    * ordered report string per day. Distributed string assembly: collect
-    * sorted structs per group, join — one shuffle, no driver loop.
+    * ordered report string per day. Distributed string assembly in ONE
+    * pass: a single groupBy(day) over the error scan counts the day and
+    * keeps its first lines — one exchange, no join, no broadcast back.
     *
     * The report is BOUNDED: only the first `maxLines` lines of a day (by
     * (ts_us, event_id), the deterministic report order) enter the string.
@@ -483,11 +484,13 @@ object LogOps {
     * ONE aggregation buffer and ONE output cell — unbounded group state,
     * multi-GB cells at 100×. The reference itself only ever reports on a
     * LIMIT-bounded fetch (main.py:25, LIMIT 1000 — the default cap here).
-    * The row_number ≤ N filter plans as WindowGroupLimit (per-partition
-    * top-N BEFORE the exchange, so the shuffle moves ≤ N lines per day per
-    * map task, and the sort is a bounded heap, not a full per-day sort).
-    * `n_incidents` stays the UNCAPPED day count — a count-only branch that
-    * shuffles 16 bytes per (task, day).
+    * The cap is a bounded top-N aggregate (`Bridge.smallestN`): per-partition
+    * top-N BEFORE the exchange (the partial aggregate), so the shuffle
+    * moves ≤ N lines per day per map task, and the state is a bounded
+    * heap, not a full per-day sort — the rank-limit contract a
+    * WindowGroupLimit gives, without the second reader of the scan that
+    * a separate window branch needs next to the count. `n_incidents`
+    * stays the UNCAPPED day count, a partial count in the same aggregate.
     */
   def incidentReport(spark: SparkSession, dir: String,
       maxLines: Int = 1000): DataFrame =
@@ -495,6 +498,7 @@ object LogOps {
 
   private[graft] def incidentReportFrom(events: DataFrame,
       maxLines: Int = 1000): DataFrame = {
+    require(maxLines >= 1, s"maxLines must be positive: $maxLines")
     val lines = events
       .where(col("event_type") === "error")
       .select(
@@ -502,23 +506,21 @@ object LogOps {
         col("event_id"),
         date_format(col("ts"), TsUs).as("ts_us"),
         logLine(col("props")).as("line"))
-    val counts = lines.groupBy(col("day"))
-      .agg(count("*").as("n_incidents"))
-    // NULL lines are filtered BEFORE the rank (they can never appear in
-    // the report, so they must not consume cap slots — and the oracle's
-    // `WHERE line IS NOT NULL` mirror keeps both rank universes identical)
-    val wDay = Window.partitionBy(col("day"))
-      .orderBy(col("ts_us"), col("event_id"))
-    val reports = lines
-      .where(col("line").isNotNull)
-      .withColumn("__rn", row_number().over(wDay))
-      .where(col("__rn") <= maxLines)
-      .groupBy(col("day"))
-      .agg(joinedLines(col("ts_us"), col("event_id")).as("report"))
-    // left join: a day whose lines are ALL NULL still surfaces, with a
-    // NULL report — the same row the old single-agg shape produced
-    counts.join(reports, Seq("day"), "left")
-      .select(col("day"), col("n_incidents"), col("report"))
+    // NULL lines never reach the top-N (the aggregate skips NULL input):
+    // they can never appear in the report, so they must not consume cap
+    // slots — the oracle's `WHERE line IS NOT NULL` mirror keeps both
+    // rank universes identical. The struct's field order IS the report
+    // order (ascending, NULLS FIRST: the old sort_array order).
+    val entry = when(col("line").isNotNull,
+      struct(col("ts_us"), col("event_id"), col("line")))
+    lines.groupBy(col("day"))
+      .agg(count("*").as("n_incidents"),
+        org.apache.spark.sql.graft.Bridge.smallestN(entry, maxLines).as("__first"))
+      // a day whose lines are ALL NULL still surfaces, with a NULL report
+      .select(col("day"), col("n_incidents"),
+        when(size(col("__first")) > 0,
+          array_join(transform(col("__first"), x => x.getField("line")), "\n"))
+          .as("report"))
   }
 
   /** Slack RCA share message (_format_slack_message, llm_processor.py:97-105

@@ -36,11 +36,16 @@ object IO {
     * caveat — the consistency point is commit completion). */
   def commitDirSwaps(fs: FileSystem, tmp: Path, liveParent: Path,
       old: Path, prefix: String): Unit = {
-    // writer entry: the swapped dirs AND their store root (tombstones,
-    // cuts, stats live beside liveParent) go stale for every serve memo
-    StoreProtocol.invalidateStore(liveParent.toString)
-    Option(liveParent.getParent)
-      .foreach(pp => StoreProtocol.invalidateStore(pp.toString))
+    // the swapped dirs AND their store root (tombstones, cuts, stats live
+    // beside liveParent) go stale for every serve memo: at writer entry,
+    // and again at the commit point (a serve that probed mid-swap cached
+    // the pre-commit view)
+    def invalidate(): Unit = {
+      StoreProtocol.invalidateStore(liveParent.toString)
+      Option(liveParent.getParent)
+        .foreach(pp => StoreProtocol.invalidateStore(pp.toString))
+    }
+    invalidate()
     fs.mkdirs(old)
     fs.listStatus(tmp).filter(st => st.isDirectory &&
         st.getPath.getName.startsWith(prefix)).foreach { rd =>
@@ -52,6 +57,7 @@ object IO {
       if (!fs.rename(rd.getPath, live))
         sys.error(s"compact: cannot move ${rd.getPath} into $live")
     }
+    invalidate()
     fs.delete(old, true)
     fs.delete(tmp, true)
   }
@@ -110,8 +116,10 @@ object IO {
     // modes; silently proceeding would let the caller first-write over a
     // missing p and a LATER recovery would then delete the only complete
     // copy. Fail loud instead — the store is intact where it is.
-    def renameOrDie(from: Path, to: Path): Unit =
+    def renameOrDie(from: Path, to: Path): Unit = {
       if (!fs.rename(from, to)) sys.error(s"recover: cannot rename $from to $to")
+      StoreProtocol.invalidateStore(p.toString) // the healed generation is live
+    }
     if (fs.exists(p)) {
       if (fs.exists(old)) fs.delete(old, true)
       if (fs.exists(tmp)) fs.delete(tmp, true)
@@ -139,9 +147,11 @@ object IO {
     // its promote, leaves the live dir in place — which is all a reader
     // needs. Only a failed rename with the live dir STILL missing is a
     // real fault (the store is genuinely unreadable).
-    def renameOrHealed(from: Path, to: Path): Unit =
+    def renameOrHealed(from: Path, to: Path): Unit = {
       if (!fs.rename(from, to) && !fs.exists(p))
         sys.error(s"recover: cannot rename $from to $to")
+      StoreProtocol.invalidateStore(p.toString) // the healed generation is live
+    }
     if (fs.exists(new Path(tmp, "_SUCCESS"))) renameOrHealed(tmp, p)
     else if (fs.exists(old)) renameOrHealed(old, p)
   }
@@ -167,6 +177,9 @@ object IO {
     fs.create(new Path(tmp, "_SUCCESS")).close()
     StoreProtocol.invalidateStore(path) // serve memos go stale with the swap
     swapInto(fs, tmp, p)
+    // commit point: a serve that probed between the entry invalidation and
+    // the rename cached the old generation — drop it now the new one is live
+    StoreProtocol.invalidateStore(path)
   }
 
   /** Reader-entry twin of [[publishStore]]: passive healing only
@@ -328,6 +341,9 @@ object IO {
     spark.read.parquet(path).repartition(nOut)
       .write.mode("overwrite").parquet(tmp.toString)
     swapInto(fs, tmp, p)
+    // the compacted files replace the ones a cached serve handle of this
+    // dir, or of the store that contains it, has listed
+    StoreProtocol.invalidateStore(path)
     val after = fs.listStatus(p).count { st =>
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")

@@ -31,9 +31,12 @@ object StoreProtocol {
   // entry (publishStore / promoteKeyed / commitDirSwaps / the compaction
   // tails) invalidates the store's whole key range, so a serve issued
   // after an erase on the same session always re-reads the tombstones
-  // (spec-pinned). Cross-PROCESS writers are outside the memo's view —
-  // the stores' single-flight-writer contract already makes concurrent
-  // external mutation undefined; a new session starts cold.
+  // (spec-pinned) — at entry AND again at the commit point, after the
+  // last rename: a serve that probes between the two would otherwise
+  // cache the pre-commit view past the commit. Cross-PROCESS writers are
+  // outside the memo's view — the stores' single-flight-writer contract
+  // already makes concurrent external mutation undefined; a new session
+  // starts cold.
 
   private val metaMemo = graft.SessionCache.store[(String, String), Any]
 
@@ -57,12 +60,15 @@ object StoreProtocol {
       compute
     }.asInstanceOf[T]
 
-  /** Drop every cached probe of the store at `path` (and anything below
-    * it) for ALL sessions — called by every writer entry. Prefix-safe:
-    * `/a/b` never invalidates `/a/bc`. */
+  /** Drop every cached probe of the store at `path`, of anything below
+    * it, and of any directory that contains it (a cached handle of an
+    * ancestor lists the changed files) for ALL sessions — called by every
+    * writer at entry and at its commit point. Prefix-safe: `/a/b` never
+    * invalidates `/a/bc`. */
   def invalidateStore(path: String): Unit = {
     val n = norm(path)
-    metaMemo.invalidate { case (p, _) => p == n || p.startsWith(n + "/") }
+    metaMemo.invalidate { case (p, _) =>
+      p == n || p.startsWith(n + "/") || n.startsWith(p + "/") }
   }
 
   /** Whether `dir` holds at least one `.parquet` data file — the gate
@@ -168,6 +174,7 @@ object StoreProtocol {
           }
       }
     }
+    invalidateStore(p.toString) // commit point: the last artifact landed
   }
 
   /** WRITER-entry healing for a crashed content-keyed promote: a tmp with

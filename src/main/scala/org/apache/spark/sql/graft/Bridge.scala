@@ -32,6 +32,15 @@ object Bridge {
     org.apache.spark.sql.catalyst.expressions.ScalarSubquery(
       df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan)
 
+  /** The `n` smallest non-NULL values of a group, ascending — Spark's
+    * bounded top-N aggregate `CollectTopK`, registered only as the
+    * internal function `collect_top_k`: its buffer is a heap of at most
+    * `n` values, partial aggregation keeps at most `n` per group per map
+    * task, and NULL input is skipped. */
+  def smallestN(c: Column, n: Int): Column =
+    Column.internalFn("collect_top_k", c, org.apache.spark.sql.functions.lit(n),
+      org.apache.spark.sql.functions.lit(true))
+
   /** Register a custom expression as a SQL function on a live session
     * (FunctionRegistry is `private[sql]`). */
   def registerFunction(spark: org.apache.spark.sql.SparkSession, name: String,

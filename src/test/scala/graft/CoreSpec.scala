@@ -26,6 +26,31 @@ object SparkTest {
     s
   }
   val Sf = "/root/testdata/sf0.001"
+
+  /** The session's listener bus (package-private in Spark, read through
+    * its JVM accessor). */
+  def bus: AnyRef = {
+    val sc = session.sparkContext
+    sc.getClass.getMethod("listenerBus").invoke(sc)
+  }
+
+  def drainBus(): Unit =
+    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+
+  /** Spark jobs started while `f` runs; the listener bus is drained on
+    * both sides so every job-start event is counted, and only those. */
+  def jobsOf(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    drainBus()
+    session.sparkContext.addSparkListener(l)
+    try { f; drainBus(); n.get }
+    finally session.sparkContext.removeSparkListener(l)
+  }
 }
 
 class CoreSpec extends AnyFunSuite {

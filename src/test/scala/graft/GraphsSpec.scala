@@ -1,7 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -134,13 +133,7 @@ class GraphsSpec extends AnyFunSuite {
     Graphs.freePendingCut()
   }
 
-  private def bus: AnyRef = {
-    val sc = spark.sparkContext
-    sc.getClass.getMethod("listenerBus").invoke(sc)
-  }
-
-  private def drainBus(): Unit =
-    bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+  import SparkTest.{bus, drainBus, jobsOf}
 
   /** (SparkContext listeners, QueryExecutionListeners, Observations still
     * waiting for their metrics) — read through the JVM accessors of
@@ -161,20 +154,6 @@ class GraphsSpec extends AnyFunSuite {
     val om = field(spark, "observationManager")
     (busListeners, qe, if (om == null) 0
       else field(om, "observations").asInstanceOf[java.util.Map[_, _]].size)
-  }
-
-  /** Spark jobs started while `f` runs; the listener bus is drained on
-    * both sides so every job-start event is counted, and only those. */
-  private def jobsOf(f: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        n.incrementAndGet()
-    }
-    drainBus()
-    spark.sparkContext.addSparkListener(l)
-    try { f; drainBus(); n.get }
-    finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("job budget: a distributed PageRank round is at most two Spark " +

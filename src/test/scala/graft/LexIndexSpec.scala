@@ -424,6 +424,88 @@ class LexIndexSpec extends AnyFunSuite {
       "customer window order part", topK = 5)).forall(_._1 % 7 != 3))
   }
 
+  test("job budget: a warm served BM25 request runs no job while its " +
+    "DataFrame is built and at most 3 when it runs") {
+    val idx = "/tmp/graft_lex_index"
+    if (!new java.io.File(s"$idx/stats").exists())
+      LexIndex.writeLexIndex(spark, Sf, idx)
+    val q = "spark join window customer"
+    // warm: the store's listing and corpus constants are read once per
+    // store generation, outside the pin
+    LexIndex.searchBm25Against(spark, idx, q).collect()
+    var out: DataFrame = null
+    val building = SparkTest.jobsOf { out = LexIndex.searchBm25Against(spark, idx, q) }
+    val running = SparkTest.jobsOf { out.collect() }
+    assert(building == 0, s"building the request ran $building jobs (schema " +
+      "inference or stats reads per request)")
+    // one term-keyed exchange (collapse + df), one doc-keyed exchange
+    // (per-doc scores), the top-k result stage
+    assert(running <= 3, s"the request ran $running jobs (8 with broadcast " +
+      "df/stats relations)")
+  }
+
+  private def corpusOf(ids: Range, tag: String): DataFrame = {
+    import spark.implicits._
+    ids.map(i => (i.toLong, s"alpha bravo $tag word$i charlie", "s"))
+      .toDF("doc_id", "text", "source")
+  }
+
+  test("writes reach a serve that cached the store: append, erase, compaction") {
+    val idx = "/tmp/graft_lex_visible"
+    wipe(idx)
+    LexIndex.writeLexIndexFrom(corpusOf(0 until 30, "base"), idx)
+    // each serve below fills or hits the store's cached postings handle
+    assert(LexIndex.searchBm25Against(spark, idx, "fresh").count() == 0)
+    LexIndex.appendLexIndex(spark, idx, corpusOf(100 until 104, "fresh"))
+    assert(rows(LexIndex.searchBm25Against(spark, idx, "fresh")).map(_._1) ==
+      (100L until 104L), "the serve after an append must see the appended docs")
+    val subjects = Set(3L, 10L, 17L, 24L)
+    assert(rows(LexIndex.searchBm25Against(spark, idx, "alpha", topK = 50))
+      .map(_._1).toSet.intersect(subjects) == subjects)
+    LexIndex.eraseLexDocs(spark, idx, corpusOf(0 until 30, "base")
+      .where(col("doc_id").isin(subjects.toSeq: _*))
+      .select(col("doc_id"), col("text")))
+    val erased = rows(LexIndex.searchBm25Against(spark, idx, "alpha", topK = 50))
+    assert(erased.size == 34 - subjects.size &&
+      !erased.exists(r => subjects(r._1)),
+      "the serve after an erase must not return an erased subject")
+    LexIndex.compactLexIndex(spark, idx)
+    assert(rows(LexIndex.searchBm25Against(spark, idx, "alpha", topK = 50)) == erased,
+      "the serve after a compaction must return the same ranking")
+  }
+
+  test("a serve that starts after an append returns sees it, while a reader " +
+    "serves throughout the append (20 runs)") {
+    val idx = "/tmp/graft_lex_race"
+    wipe(idx)
+    LexIndex.writeLexIndexFrom(corpusOf(0 until 20, "base"), idx)
+    (1 to 20).foreach { run =>
+      val term = s"race$run"
+      val appended = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val seen = new java.util.concurrent.atomic.AtomicLong(-1L)
+      val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+      val reader = new Thread(() =>
+        try {
+          var done = false
+          while (!done) {
+            // read the flag BEFORE the serve starts: only a serve begun
+            // after the writer returned is held to the append
+            val after = appended.get()
+            val n = LexIndex.searchBm25Against(spark, idx, term).count()
+            if (after) { seen.set(n); done = true }
+          }
+        } catch { case t: Throwable => failure.set(t) })
+      reader.start()
+      LexIndex.appendLexIndex(spark, idx,
+        corpusOf(run * 100 until run * 100 + 3, term))
+      appended.set(true)
+      reader.join()
+      Option(failure.get()).foreach(t => throw t)
+      assert(seen.get() == 3L,
+        s"run $run: the first serve after the append saw ${seen.get()} of 3 docs")
+    }
+  }
+
   test("servedIndexPath is collision-proof: dirs that sanitize alike " +
     "get distinct stores; the path is session-unpredictable") {
     val p1 = LexIndex.storePathFor("/data/a b")

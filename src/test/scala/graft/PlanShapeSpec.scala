@@ -46,15 +46,56 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(plan("vector_knn").contains("WindowGroupLimit"))
   }
 
-  test("incident_report caps each day's lines via WindowGroupLimit") {
-    // the per-day line cap must plan as a rank-limit (partial top-N per
-    // map task BEFORE the exchange) — a plain Window + Filter would sort
-    // every line of a day on one reducer and only then drop the excess,
-    // i.e. the unbounded-group-state shape the cap exists to remove
+  test("incident_report caps each day's lines with a bounded top-N before the exchange") {
+    // the per-day line cap must plan as a partial top-N per map task
+    // BEFORE the exchange, bounded by maxLines — a plain Window + Filter
+    // (or an uncapped collect_list) would gather every line of a day on
+    // one reducer and only then drop the excess, i.e. the unbounded-
+    // group-state shape the cap exists to remove. Counts and lines come
+    // from that one aggregate: no window branch, no join back.
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Partial
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    // every node of the final adaptive plan, through its query stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    // the bound of each partial collect_top_k (CollectTopK is
+    // private[spark]; its second field is the heap size)
+    def partialTopN(p: SparkPlan): Seq[Any] = p match {
+      case a: BaseAggregateExec => a.aggregateExpressions
+        .filter(e => e.mode == Partial &&
+          e.aggregateFunction.prettyName == "collect_top_k")
+        .map(_.aggregateFunction.productElement(1))
+      case _ => Nil
+    }
+    Seq("incident_report" -> 1000, "incident_report_cap" -> 25,
+        "search_all" -> 1000).foreach { case (q, cap) =>
+      val df = SparkEntry.queries(q)(spark, Sf)
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      val belowExchange = all.collect {
+        case x: ShuffleExchangeExec => nodes(x.child).flatMap(partialTopN)
+      }.flatten
+      assert(belowExchange == Seq(cap),
+        s"$q's line cap must be one partial top-$cap below the exchange:\n" +
+          df.queryExecution.executedPlan)
+      assert(!all.exists(n => n.nodeName.contains("Window") ||
+          n.nodeName.contains("Join")),
+        s"$q must not rank in a window branch or join the count back:\n" +
+          df.queryExecution.executedPlan)
+    }
+  }
+
+  test("job budget: incident_report and search_all run as one scan and one exchange") {
     Seq("incident_report", "search_all").foreach { q =>
-      val p = plan(q)
-      assert(p.contains("WindowGroupLimit"),
-        s"$q's line cap must plan as WindowGroupLimit:\n$p")
+      SparkEntry.queries(q)(spark, Sf).collect() // warm: listing lands outside
+      val jobs = SparkTest.jobsOf { SparkEntry.queries(q)(spark, Sf).collect() }
+      assert(jobs <= 2, s"$q ran $jobs jobs (4 with the count/report join)")
     }
   }
 

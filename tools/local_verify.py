@@ -1,8 +1,12 @@
 #!/usr/bin/env python3
 """Local stand-in for the driver's correctness gate.
 
-Usage: python3 tools/local_verify.py <sfDir> <outDir>
-  (run `sbt "runMain graft.Verify <sfDir> <outDir>"` first)
+Usage: python3 tools/local_verify.py <sfDir> <outDir> [entry ...]
+  (run `sbt "runMain graft.Verify <sfDir> <outDir> [entry ...]"` first)
+
+Optional entry names after the two positional args restrict the compare to
+those entries, as `graft.Verify` does; a named entry with no output dir
+fails, so a typo cannot pass silently.
 
 For each query parquet in outDir, runs the matching oracle_sql.json entry in
 DuckDB against the raw testdata parquet, then compares: column-name sets,
@@ -41,7 +45,7 @@ def canon(df: pd.DataFrame) -> str:
         h.update(b"\x1e")
     return h.hexdigest()
 
-def main(sf_dir, out_dir):
+def main(sf_dir, out_dir, only=()):
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
@@ -49,9 +53,13 @@ def main(sf_dir, out_dir):
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
-    for name in sorted(os.listdir(out_dir)):
+    names = sorted(set(only)) if only else sorted(os.listdir(out_dir))
+    for name in names:
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
+            if only:
+                print(f"  {name:24s} FAIL no output dir")
+                n_fail += 1
             continue
         spark_df = pq.read_table(d).to_pandas()
         if name not in oracle:
@@ -93,4 +101,4 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    sys.exit(main(sys.argv[1], sys.argv[2], sys.argv[3:]))
